@@ -101,6 +101,8 @@ def _validate_frame(frame) -> None:
 
 
 def _js_truthy(v) -> bool:
+    """JS truthiness: 0/-0/NaN/false/''/null are falsy; [] and {} are
+    truthy."""
     return not (v is None or v is False or v == 0 or v == "" or
                 (isinstance(v, float) and v != v))
 
@@ -554,17 +556,6 @@ def cleanup_preserve(element, options: dict | None = None, _memo=None):
             element[k] = cleanup_preserve(element[k], options, _memo)
         return element
     return element
-
-
-def _js_truthy(v) -> bool:
-    """JS truthiness: 0/false/''/null are falsy; [] and {} are truthy."""
-    if v is None or v is False:
-        return False
-    if isinstance(v, (int, float)) and not isinstance(v, bool) and v == 0:
-        return False
-    if v == "":
-        return False
-    return True
 
 
 def cleanup_null(element, options: dict | None = None):

@@ -77,9 +77,9 @@ _STRICT_JSON = json.JSONDecoder(parse_constant=_reject_json_constant)
 # as a document on the kernel path while the hybrid's JVM probe routes
 # it to the envelope — the same asymmetry class as the NaN tokens
 # above. The BIG decoder mirrors the number and name limits exactly
-# (and string values in object members); the one remaining gap — a
-# >20M-char string as an ARRAY element — needs a >20 MB text cell and
-# is documented rather than mirrored (stock json has no array hook).
+# (and string values in object members); a >20M-char string as an ARRAY
+# element cannot be mirrored (stock json has no array hook), so the
+# hybrid routes every text over _JK_MAX_STRING chars to the kernel.
 _JK_MAX_NUM_DIGITS = 1000
 _JK_MAX_NAME = 50_000
 _JK_MAX_STRING = 20_000_000
@@ -305,11 +305,10 @@ _JSONLD_SHAPE = r'^\s*[\[{]'
 # kernel's expand->toRDF output is exactly two extra triples beyond the
 # envelope — the invokes IRI and an rdf:JSON literal whose value is the
 # JCS of args — both reproducible in pure column algebra.  Anything
-# else (numbers, booleans, nesting, escapes, non-ASCII, unsorted or
-# duplicate keys, other spacings, a missing member) still routes to the
-# Python kernel, so the fast path can never diverge: it only accepts
-# inputs whose kernel output it provably reproduces byte-for-byte
-# (parity battery: tests/test_hybrid.py).
+# else (numbers, booleans, nesting, escapes, non-ASCII, other spacings,
+# a missing member) still routes to the Python kernel, so the fast path
+# can never diverge: it only accepts inputs whose kernel output it
+# provably reproduces byte-for-byte (parity battery: tests/test_hybrid.py).
 _TOOL_SAFE = r' !#-\[\]-z|~'
 _TOOL_SIMPLE_RE = (
     r'^\{"args": \{(("[%(c)s]*": "[%(c)s]*")(, "[%(c)s]*": "[%(c)s]*")*)?\}, '
@@ -319,41 +318,29 @@ _TOOL_SIMPLE_RE = (
 def _tool_fast_cols():
     """(simple?, name, jcs_of_args) for the JVM tool fast path.
 
-    ``simple`` is a SINGLE anchored rlike: it gates routing in the
-    hybrid filter, where conditions get no common-subexpression
-    elimination, so every extra term would re-run its regexes per row
-    per branch. The heavier work (extraction, duplicate-key last-wins,
-    JCS member sort) lives only in the projection that emits the
-    triples. Within the grammar the only '"' characters are the string
-    delimiters, so quote-delimited extraction is unambiguous: tokens
-    followed by ': "' are keys, tokens preceded by ': ' are values.
-    json.loads keeps the LAST of duplicate keys and RFC 8785 sorts
-    members by UTF-16 code units — mirrored here by the exists-later
-    filter and array_sort (binary order == code-unit order on the
-    ASCII-only grammar), so ANY rlike-accepted payload is reproduced
-    byte-for-byte (battery: tests/test_hybrid.py)."""
+    ``simple`` accepts a payload in _TOOL_SIMPLE_RE whose keys are
+    strictly ascending and which is short enough that no key or value
+    can exceed the BIG decoder's Jackson limits (those payloads become
+    toolRaw on the kernel path). The rlike comes first, so the key
+    extraction only runs on payloads it accepts. Within the grammar the
+    only '"' characters are the string delimiters, so tokens followed
+    by ': "' are exactly the keys, and the JCS of a strictly ascending
+    args object is its text with the two separator spaces removed
+    (binary order == UTF-16 code-unit order on the ASCII-only grammar).
+    Unsorted or duplicate keys route to the kernel, which sorts and
+    keeps the last duplicate (battery: tests/test_hybrid.py).
+
+    No higher-order function here: one would drop the whole envelope
+    Generate out of whole-stage codegen."""
     tool = F.col("tool")
-    simple = tool.rlike(_TOOL_SIMPLE_RE)
     args_str = F.regexp_extract(tool, r'^\{"args": (\{[^{}]*\}), "name"', 1)
     keys = F.regexp_extract_all(args_str, F.lit('"([^"]*)": "'), F.lit(1))
-    vals = F.regexp_extract_all(args_str, F.lit('": "([^"]*)"'), F.lit(1))
-    tagged = F.zip_with(
-        keys, vals, lambda k, v: F.struct(k.alias("k"), v.alias("v")))
-    tagged = F.transform(
-        tagged, lambda p, i: F.struct(p["k"].alias("k"), p["v"].alias("v"),
-                                      i.alias("i")))
-    kept = F.filter(
-        tagged,
-        lambda p: ~F.exists(tagged,
-                            lambda q: (q["k"] == p["k"]) & (q["i"] > p["i"])))
+    simple = (tool.rlike(_TOOL_SIMPLE_RE)
+              & (F.length(tool) <= _JK_MAX_NAME)
+              & (keys == F.sort_array(F.array_distinct(keys))))
     name = F.regexp_extract(tool, r', "name": "([A-Za-z0-9_.-]+)"\}$', 1)
-    jcs = F.concat(
-        F.lit("{"),
-        F.concat_ws(",", F.transform(
-            F.array_sort(kept),
-            lambda p: F.concat(F.lit('"'), p["k"], F.lit('":"'), p["v"],
-                               F.lit('"')))),
-        F.lit("}"))
+    jcs = F.replace(F.replace(args_str, F.lit('": "'), F.lit('":"')),
+                    F.lit('", "'), F.lit('","'))
     return simple, name, jcs
 
 
@@ -364,6 +351,16 @@ def _is_doc_col():
         | F.col("text").contains('"@value"'))
     parses = F.get_json_object("text", "$").isNotNull()
     return F.col("text").isNotNull() & shape & parses
+
+
+def _needs_kernel_col():
+    """The hybrid's routing predicate: JSON-LD documents, tool payloads
+    outside the fast path, and texts too long for the JVM probe to
+    judge the way the kernel's parser does."""
+    tool_simple, _, _ = _tool_fast_cols()
+    return (_is_doc_col() | (F.col("tool").isNotNull() & ~tool_simple)
+            | (F.col("text").isNotNull()
+               & (F.length("text") > _JK_MAX_STRING)))
 
 
 def _envelope_triples_jvm(plain: DataFrame) -> DataFrame:
@@ -404,7 +401,7 @@ def _envelope_triples_jvm(plain: DataFrame) -> DataFrame:
         F.when(F.col("ts").isNotNull(),
                t(V + "ts", "literal", ts_iso, _XSD + "dateTime")),
         # the tool fast path (routing guarantees any tool payload that
-        # reaches this branch satisfies _TOOL_SIMPLE_RE; the guard is
+        # reaches this branch passes the fast-path gate; the guard is
         # kept so the operator is safe standalone)
         F.when(tool_ok,
                t(V + "invokes", "iri",
@@ -412,11 +409,10 @@ def _envelope_triples_jvm(plain: DataFrame) -> DataFrame:
                  None)),
         F.when(tool_ok, t(V + "toolArgs", "literal", tool_jcs, _RDF_JSON)),
     )
-    exploded = (plain.select("conv_id", "turn_idx",
-                             F.explode(F.array_compact(rows)).alias("r"))
-                .select("conv_id", "turn_idx",
-                        F.lit("triple").alias("kind"), "r.*"))
-    return exploded
+    return (plain.select("conv_id", "turn_idx", F.explode(rows).alias("r"))
+            .filter(F.col("r").isNotNull())
+            .select("conv_id", "turn_idx", F.lit("triple").alias("kind"),
+                    "r.*"))
 
 
 def extract_triples_hybrid(transcripts: DataFrame, *,
@@ -428,8 +424,7 @@ def extract_triples_hybrid(transcripts: DataFrame, *,
     tool payloads outside the provable grammar cross into the Arrow
     kernel. Same output as ``extract_triples`` (parity-tested), but the
     common cases never leave whole-stage codegen."""
-    tool_simple, _, _ = _tool_fast_cols()
-    needs_kernel = _is_doc_col() | (F.col("tool").isNotNull() & ~tool_simple)
+    needs_kernel = _needs_kernel_col()
     plain = transcripts.filter(~needs_kernel)
     # NOT repartitioned before the Arrow stage: an interleaved pinned
     # A/B measured the extra exchange+stage barrier at 0.89x (the

@@ -7,6 +7,7 @@ import pytest
 from jsonld_js_spark.kernel import frame as k_frame_mod  # noqa: F401
 from jsonld_js_spark.kernel.api import frame as k_frame
 from jsonld_js_spark.kernel.errors import JsonLdError
+from jsonld_js_spark.kernel.frame import _js_truthy
 
 from tests.ref_oracle.harness import ReferenceOracle
 from tests.test_differential import deep_eq
@@ -99,3 +100,13 @@ def test_embed_divergence_double_reference(oracle, embed):
     assert ref["ok"], ref
     mine = k_frame(DOC2, frame, {})
     assert deep_eq(mine, ref["result"]), f"embed={embed}"
+
+
+@pytest.mark.parametrize("value,truthy", [
+    (0, False), (-0.0, False), (float("nan"), False), ("", False),
+    (None, False), (False, False), ([], True), ({}, True),
+])
+def test_js_truthy_matches_js_boolean(value, truthy):
+    """Boolean(v) in JS: the frame cleanup and @value matching filter
+    with it (lib/frame.js)."""
+    assert _js_truthy(value) is truthy

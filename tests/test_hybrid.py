@@ -54,46 +54,66 @@ def test_hybrid_matches_kernel_on_hostile_rows(spark):
 
 
 def test_hybrid_matches_kernel_on_tool_payload_battery(spark):
-    """The JVM tool fast path (r6) may only accept payloads whose
-    kernel output it reproduces byte-for-byte; everything outside the
-    grammar must still route to the kernel. Both halves are parity —
-    this battery mixes routable and unroutable payloads."""
+    """The JVM tool fast path may only accept payloads whose kernel
+    output it reproduces byte-for-byte; everything else must route to
+    the kernel. Both halves are parity, and each payload's route
+    through the hybrid's routing predicate is pinned."""
+    from jsonld_js_spark.operators.pipeline import _needs_kernel_col
+
     ts = datetime.datetime(2026, 1, 1, 12, 0, 7)
+    jvm, kernel = False, True
     payloads = [
         # routable: json.dumps(sort_keys=True) flat safe-string form
-        '{"args": {"q": "query41"}, "name": "browser"}',
-        '{"args": {}, "name": "noargs"}',
-        '{"args": {"a": "x", "b": "y z"}, "name": "two.args"}',
-        '{"args": {"k": "punct !#$%&\'()*+,-./:;<=>?@[]^_`|~"}, "name": "p-1"}',
-        '{"args": {"": "empty key"}, "name": "ek"}',
+        ('{"args": {"q": "query41"}, "name": "browser"}', jvm),
+        ('{"args": {}, "name": "noargs"}', jvm),
+        ('{"args": {"a": "x", "b": "y z"}, "name": "two.args"}', jvm),
+        ('{"args": {"k": "punct !#$%&\'()*+,-./:;<=>?@[]^_`|~"}, "name": "p-1"}',
+         jvm),
+        ('{"args": {"": "empty key"}, "name": "ek"}', jvm),
+        # separators inside a value are not separators
+        ('{"args": {"q": "a, b: c"}, "name": "seps"}', jvm),
+        # strictly ascending keys with a space (' ' < 'b')
+        ('{"args": {"a": "1", "a b": "2", "ab": "3"}, "name": "spaced"}', jvm),
         # unroutable: must fall back to the kernel (each exercises one
         # grammar exit)
-        '{"args": {"q": 1}, "name": "int-arg"}',
-        '{"args": {"q": true}, "name": "bool-arg"}',
-        '{"args": {"q": null}, "name": "null-arg"}',
-        '{"args": {"q": {"nested": "x"}}, "name": "nested"}',
-        '{"args": {"q": ["x"]}, "name": "array-arg"}',
-        '{"args": {"q": "esc \\" quote"}, "name": "escaped"}',
-        '{"args": {"q": "back \\\\ slash"}, "name": "bslash"}',
-        '{"args": {"q": "unicode ü"}, "name": "nonascii"}',
-        '{"args": {"b": "x", "a": "y"}, "name": "unsorted"}',
-        '{"args": {"a": "x", "a": "y"}, "name": "dupkey"}',
-        '{"name": "argsless"}',
-        '{"args": {"q": "x"}}',
-        '{"args":{"q":"x"},"name":"tight-spacing"}',
-        '{"name": "reversed", "args": {"q": "x"}}',
-        '{"args": {"q": "x"}, "name": "bad name!"}',
-        'not json at all',
-        '{"args": {"q": "x"}, "name": "trailing"} ',
+        ('{"args": {"q": 1}, "name": "int-arg"}', kernel),
+        ('{"args": {"q": true}, "name": "bool-arg"}', kernel),
+        ('{"args": {"q": null}, "name": "null-arg"}', kernel),
+        ('{"args": {"q": {"nested": "x"}}, "name": "nested"}', kernel),
+        ('{"args": {"q": ["x"]}, "name": "array-arg"}', kernel),
+        ('{"args": {"q": "esc \\" quote"}, "name": "escaped"}', kernel),
+        ('{"args": {"q": "back \\\\ slash"}, "name": "bslash"}', kernel),
+        ('{"args": {"q": "unicode ü"}, "name": "nonascii"}', kernel),
+        # keys not strictly ascending: the kernel sorts them and keeps
+        # the last of duplicate keys
+        ('{"args": {"b": "x", "a": "y"}, "name": "unsorted"}', kernel),
+        ('{"args": {"ab": "3", "a b": "2", "a": "1"}, "name": "unsorted2"}',
+         kernel),
+        ('{"args": {"a": "x", "a": "y"}, "name": "dupkey"}', kernel),
+        ('{"args": {"a": "x", "a": "x"}, "name": "dupkey-same"}', kernel),
+        # a key past the BIG decoder's 50,000-char name limit makes the
+        # kernel keep the payload as toolRaw
+        ('{"args": {"' + "k" * 50_001 + '": "v"}, "name": "longkey"}', kernel),
+        ('{}', kernel),
+        ('{"name": "argsless"}', kernel),
+        ('{"args": {"q": "x"}}', kernel),
+        ('{"args":{"q":"x"},"name":"tight-spacing"}', kernel),
+        ('{"name": "reversed", "args": {"q": "x"}}', kernel),
+        ('{"args": {"q": "x"}, "name": "bad name!"}', kernel),
+        ('not json at all', kernel),
+        ('{"args": {"q": "x"}, "name": "trailing"} ', kernel),
     ]
     rows = [("c", i, "tool", f"tool result {i}", p, ts)
-            for i, p in enumerate(payloads)]
+            for i, (p, _) in enumerate(payloads)]
     df = spark.createDataFrame(
         rows, "conv_id string, turn_idx int, role string, text string, "
               "tool string, ts timestamp")
     a = _collect(triples_only(extract_triples(df)))
     b = _collect(triples_only(extract_triples_hybrid(df)))
     assert a == b
+    routes = dict(df.select("turn_idx", _needs_kernel_col()).collect())
+    assert [routes[i] for i in range(len(payloads))] == \
+        [route for _, route in payloads]
 
 
 def test_hybrid_matches_kernel_across_nesting_depth_band(spark):
@@ -147,7 +167,7 @@ def test_hybrid_matches_kernel_at_jackson_size_limits(spark):
 def test_big_decoder_mirrors_jackson_string_limit():
     """Decoder-level: object-member string values past Jackson's
     ~20M-char cap are refused by the BIG decoder (array elements are
-    the documented remaining gap — they need a >20 MB text cell)."""
+    not; the routing test below covers them)."""
     import pytest
 
     from jsonld_js_spark.operators.pipeline import (
@@ -157,6 +177,20 @@ def test_big_decoder_mirrors_jackson_string_limit():
     assert _STRICT_JSON_BIG.decode(ok)["a"] == "x" * 1000
     with pytest.raises(ValueError):
         _STRICT_JSON_BIG.decode('{"a": "' + "x" * (_JK_MAX_STRING + 1) + '"}')
+
+
+def test_hybrid_routes_texts_past_jackson_string_limit_to_kernel(spark):
+    """The JVM probe refuses a >20M-char string anywhere, the kernel's
+    parser only in object members; every text that long goes to the
+    kernel, whose parse then decides."""
+    from jsonld_js_spark.operators.pipeline import (
+        _JK_MAX_STRING, _needs_kernel_col)
+
+    df = spark.createDataFrame(
+        [("c", 0, "user", "x" * (_JK_MAX_STRING + 1), None, None)],
+        "conv_id string, turn_idx int, role string, text string, "
+        "tool string, ts timestamp")
+    assert df.filter(_needs_kernel_col()).count() == 1
 
 
 def test_hybrid_matches_kernel_on_tool_payload_fuzz(spark):
@@ -171,7 +205,7 @@ def test_hybrid_matches_kernel_on_tool_payload_fuzz(spark):
 
     from pyspark.sql import functions as F
 
-    from jsonld_js_spark.operators.pipeline import _tool_fast_cols
+    from jsonld_js_spark.operators.pipeline import _needs_kernel_col
 
     rng = random.Random(7)
     safe = "abcdefghijklmnopqrstuvwxyzABCDEFGHIJKLMNOPQRSTUVWXYZ0123456789 _.:/+@!#$%&'()*,-;<=>?^`|~[]"
@@ -227,8 +261,8 @@ def test_hybrid_matches_kernel_on_tool_payload_fuzz(spark):
     a = _collect(triples_only(extract_triples(df)))
     b = _collect(triples_only(extract_triples_hybrid(df)))
     assert a == b
-    tool_simple, _, _ = _tool_fast_cols()
-    n_routed = df.filter(F.col("tool").isNotNull() & tool_simple).count()
+    n_routed = df.filter(F.col("tool").isNotNull()
+                         & ~_needs_kernel_col()).count()
     assert n_routed >= 20, f"grammar rejects nearly everything ({n_routed})"
 
 
@@ -238,12 +272,11 @@ def test_hybrid_tool_fast_path_fires(spark):
     kernel side of the hybrid must see only the embedded-doc turns."""
     from pyspark.sql import functions as F
 
-    from jsonld_js_spark.operators.pipeline import _is_doc_col, _tool_fast_cols
+    from jsonld_js_spark.operators.pipeline import (
+        _is_doc_col, _needs_kernel_col)
 
     tx = synthesize_transcripts(spark, 50, seed=42).cache()
-    tool_simple, _, _ = _tool_fast_cols()
-    needs_kernel = _is_doc_col() | (F.col("tool").isNotNull() & ~tool_simple)
-    n_kernel = tx.filter(needs_kernel).count()
+    n_kernel = tx.filter(_needs_kernel_col()).count()
     n_doc = tx.filter(_is_doc_col()).count()
     n_tool = tx.filter(F.col("tool").isNotNull()).count()
     assert n_tool > 0
@@ -253,14 +286,20 @@ def test_hybrid_tool_fast_path_fires(spark):
 
 
 def test_hybrid_plain_path_has_no_python_stage(spark):
-    """The plan for plain turns must not contain a Python/Arrow eval
-    node — that's the point of the fast path."""
+    """The plan for plain and fast-path tool turns must not contain a
+    Python/Arrow eval node — that's the point of the fast path — and
+    its Generate must run under whole-stage codegen: any higher-order
+    function (transform, filter, array_compact, ...) is evaluated
+    interpreted and takes the Generate out of it."""
     import datetime
+    import re
     tx = spark.createDataFrame(
-        [("c", 0, "user", "plain text", None, datetime.datetime(2026, 1, 1))],
+        [("c", 0, "user", "plain text", None, datetime.datetime(2026, 1, 1)),
+         ("c", 1, "tool", "r", '{"args": {"q": "x"}, "name": "t"}', None)],
         "conv_id string, turn_idx int, role string, text string, "
         "tool string, ts timestamp")
     from jsonld_js_spark.operators.pipeline import _envelope_triples_jvm
     plan = _envelope_triples_jvm(tx)._jdf.queryExecution().executedPlan().toString()
     assert "ArrowEvalPython" not in plan and "MapInPandas" not in plan
-    assert "*(" in plan  # whole-stage-codegen stages print as *(N)
+    assert re.search(r"\*\(\d+\) Generate", plan), plan
+    assert "lambda" not in plan
