@@ -323,24 +323,28 @@ def _tool_fast_cols():
     can exceed the BIG decoder's Jackson limits (those payloads become
     toolRaw on the kernel path). The rlike comes first, so the key
     extraction only runs on payloads it accepts. Within the grammar the
-    only '"' characters are the string delimiters, so tokens followed
-    by ': "' are exactly the keys, and the JCS of a strictly ascending
-    args object is its text with the two separator spaces removed
-    (binary order == UTF-16 code-unit order on the ASCII-only grammar).
-    Unsorted or duplicate keys route to the kernel, which sorts and
-    keeps the last duplicate (battery: tests/test_hybrid.py).
+    only '"' characters are the string delimiters, and ',', ':' and ' '
+    may appear inside keys and values, so both regexes below consume
+    whole '"key": "value"' pairs from a key's opening quote: a match
+    can never start inside a string. The JCS of a strictly ascending
+    args object is then its text with the space after each pair's ':'
+    and ',' removed (binary order == UTF-16 code-unit order on the
+    ASCII-only grammar). Unsorted or duplicate keys route to the
+    kernel, which sorts and keeps the last duplicate (battery:
+    tests/test_hybrid.py).
 
     No higher-order function here: one would drop the whole envelope
     Generate out of whole-stage codegen."""
     tool = F.col("tool")
     args_str = F.regexp_extract(tool, r'^\{"args": (\{[^{}]*\}), "name"', 1)
-    keys = F.regexp_extract_all(args_str, F.lit('"([^"]*)": "'), F.lit(1))
+    keys = F.regexp_extract_all(args_str, F.lit('"([^"]*)": "[^"]*"'),
+                                F.lit(1))
     simple = (tool.rlike(_TOOL_SIMPLE_RE)
               & (F.length(tool) <= _JK_MAX_NAME)
               & (keys == F.sort_array(F.array_distinct(keys))))
     name = F.regexp_extract(tool, r', "name": "([A-Za-z0-9_.-]+)"\}$', 1)
-    jcs = F.replace(F.replace(args_str, F.lit('": "'), F.lit('":"')),
-                    F.lit('", "'), F.lit('","'))
+    jcs = F.regexp_replace(args_str, r'("[^"]*"): ("[^"]*")(,?) ?',
+                           "$1:$2$3")
     return simple, name, jcs
 
 

@@ -74,6 +74,14 @@ def test_hybrid_matches_kernel_on_tool_payload_battery(spark):
         ('{"args": {"q": "a, b: c"}, "name": "seps"}', jvm),
         # strictly ascending keys with a space (' ' < 'b')
         ('{"args": {"a": "1", "a b": "2", "ab": "3"}, "name": "spaced"}', jvm),
+        # keys and values that are exactly a separator: with its
+        # delimiting quotes each reads as '", "' or '": "'
+        ('{"args": {"a": ", "}, "name": "comma-val"}', jvm),
+        ('{"args": {"a": ": "}, "name": "colon-val"}', jvm),
+        ('{"args": {": ": "v"}, "name": "colon-key"}', jvm),
+        ('{"args": {", ": "y", "x": ""}, "name": "comma-key"}', jvm),
+        ('{"args": {" ": "a", "0": "c", ": ": "b"}, "name": "sep-sorted"}',
+         jvm),
         # unroutable: must fall back to the kernel (each exercises one
         # grammar exit)
         ('{"args": {"q": 1}, "name": "int-arg"}', kernel),
@@ -91,6 +99,9 @@ def test_hybrid_matches_kernel_on_tool_payload_battery(spark):
          kernel),
         ('{"args": {"a": "x", "a": "y"}, "name": "dupkey"}', kernel),
         ('{"args": {"a": "x", "a": "x"}, "name": "dupkey-same"}', kernel),
+        # unsorted (': ' > '0'), though reading '", "' as a key sorts it
+        ('{"args": {" ": "a", ": ": "b", "0": "c"}, "name": "sep-unsorted"}',
+         kernel),
         # a key past the BIG decoder's 50,000-char name limit makes the
         # kernel keep the payload as toolRaw
         ('{"args": {"' + "k" * 50_001 + '": "v"}, "name": "longkey"}', kernel),
@@ -264,6 +275,41 @@ def test_hybrid_matches_kernel_on_tool_payload_fuzz(spark):
     n_routed = df.filter(F.col("tool").isNotNull()
                          & ~_needs_kernel_col()).count()
     assert n_routed >= 20, f"grammar rejects nearly everything ({n_routed})"
+
+
+def test_hybrid_matches_kernel_on_separator_alphabet_fuzz(spark):
+    """Keys and values drawn from the separator characters themselves
+    (',', ':', ' ') plus two ordinary ones, so strings like ', ' and
+    ': ' are common and their delimiting quotes often read as '", "'
+    or '": "'. Sorted and unsorted styles alike must match the kernel,
+    and the sorted, duplicate-free ones must take the JVM route."""
+    import json as _json
+    import random
+
+    from jsonld_js_spark.operators.pipeline import _needs_kernel_col
+
+    rng = random.Random(11)
+    alphabet = ", :a0"
+
+    def rand_str():
+        return "".join(rng.choice(alphabet) for _ in range(rng.randint(0, 3)))
+
+    payloads = []
+    for _ in range(200):
+        args = {rand_str(): rand_str() for _ in range(rng.randint(1, 4))}
+        payloads.append(_json.dumps({"args": args, "name": "t"},
+                                    sort_keys=rng.random() < 0.6))
+    rows = [("c", i, "tool", f"t{i}", p, None) for i, p in enumerate(payloads)]
+    df = spark.createDataFrame(
+        rows, "conv_id string, turn_idx int, role string, text string, "
+              "tool string, ts timestamp")
+    a = _collect(triples_only(extract_triples(df)))
+    b = _collect(triples_only(extract_triples_hybrid(df)))
+    assert a == b
+    routes = dict(df.select("turn_idx", _needs_kernel_col()).collect())
+    for i, p in enumerate(payloads):
+        keys = list(_json.loads(p)["args"])
+        assert routes[i] == (keys != sorted(keys)), p
 
 
 def test_hybrid_tool_fast_path_fires(spark):
