@@ -1,17 +1,18 @@
 """Near-duplicate detection operators — the 100-TB scale path.
 
-``minhash_lsh_pairs`` is the generic MinHash+LSH candidate generator
-behind the ``doc_dedup_minhash_lsh`` driver query, with the one knob
-that query (oracle-matched, so cap-free) cannot expose: a HOT-BUCKET
-CAP. An LSH bucket of size c contributes c·(c-1)/2 candidate pairs;
-a single degenerate bucket (boilerplate, empty-ish docs, template
-spam) turns the whole job quadratic. With ``max_bucket`` set, buckets
-larger than the cap contribute only a star around their smallest
-doc_id (c-1 pairs — every member still pairs with the representative,
-so connected-component dedup keeps the full cluster) and the drop is
-REPORTED, never silent: the returned DataFrame is accompanied by a
-``dropped_buckets`` DataFrame listing (band, sig, size) for every
-capped bucket.
+``minhash_lsh_pairs`` is the ONE MinHash+LSH candidate generator: every
+LSH dedup query configures it instead of re-implementing it.
+``doc_dedup_minhash_lsh`` runs it without a cap; the capped queries
+(``doc_dedup_minhash_capped``, ``doc_dedup_ngram_minhash``,
+``doc_dedup_components``) set the HOT-BUCKET CAP. An LSH bucket of size
+c contributes c·(c-1)/2 candidate pairs; a single degenerate bucket
+(boilerplate, empty-ish docs, template spam) turns the whole job
+quadratic. With ``max_bucket`` set, buckets larger than the cap
+contribute only a star around their smallest doc_id (c-1 pairs — every
+member still pairs with the representative, so connected-component
+dedup keeps the full cluster) and the drop is REPORTED, never silent:
+the returned DataFrame is accompanied by a ``dropped_buckets``
+DataFrame listing (band, sig, size) for every capped bucket.
 
 Exact-duplicate token-set classes are collapsed to a min-doc_id
 representative BEFORE hashing (exact dedup belongs before near-dup
@@ -27,6 +28,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..functions import hash60
 from .cachereg import release_caches, scoped_cache
 
 
@@ -42,11 +44,6 @@ def round4_boundary_num(threshold: float) -> int:
     if (m - 1) / 10000 >= threshold:
         m -= 1
     return 2 * m - 1
-
-
-def _hash60(col):
-    """md5-hex-prefix -> 60-bit integer (cross-engine reproducible)."""
-    return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
 
 
 def minhash_band_structs(toks_col, n_minhash: int, n_bands: int):
@@ -65,7 +62,7 @@ def minhash_band_structs(toks_col, n_minhash: int, n_bands: int):
     columns get inlined by CollapseProject and recomputed per use."""
     half = (n_minhash + 1) // 2
     rpb = n_minhash // n_bands
-    th = F.transform(toks_col, lambda t: _hash60(t).cast("string"))
+    th = F.transform(toks_col, lambda t: hash60(t).cast("string"))
 
     def sigs_from_mhs(m):
         out = []
@@ -127,12 +124,11 @@ def collapse_exact_shapes(d: DataFrame) -> DataFrame:
 def minhash_lsh_pairs(docs: DataFrame, *, n_minhash: int = 12,
                       n_bands: int = 3, threshold: float = 0.5,
                       max_bucket: int | None = None,
-                      id_col: str = "doc_id",
                       toks_col: str = "toks",
                       release: bool = True) -> tuple[DataFrame, DataFrame]:
     """(doc1, doc2, jaccard) near-dup pairs + (band, sig, size) capped
-    buckets. ``docs`` carries one row per document with a distinct
-    token array in ``toks_col``.
+    buckets. ``docs`` carries one row per document: its ``doc_id`` and
+    a distinct token array in ``toks_col``.
 
     ``release=False`` when the CALLER already released the previous
     pipeline's scoped caches and registered caches of its own that
@@ -145,8 +141,7 @@ def minhash_lsh_pairs(docs: DataFrame, *, n_minhash: int = 12,
     # arrays after its generator barrier (a filter on an unmaterialized
     # toks expression would push below any upstream exchange and run
     # the whole tokenize in the scan task)
-    d = docs.select(F.col(id_col).alias("doc_id"),
-                    F.col(toks_col).alias("toks"))
+    d = docs.select("doc_id", F.col(toks_col).alias("toks"))
 
     reps = scoped_cache(collapse_exact_shapes(d))
 
@@ -155,7 +150,8 @@ def minhash_lsh_pairs(docs: DataFrame, *, n_minhash: int = 12,
     # functions per md5, reproducible in DuckDB via substr(md5(), off,
     # 15)), but there is no token explode and no hash aggregation — the
     # old shape's corpus x tokens exchange is gone and the first shuffle
-    # in the pipeline is the bucket-size window
+    # in the pipeline is the bucket-size window (capped) or the bucket
+    # self-join (uncapped)
     buckets = (reps.select(
         "doc_id",
         F.explode(minhash_band_structs(F.col("toks"), n_minhash, n_bands))
@@ -163,11 +159,11 @@ def minhash_lsh_pairs(docs: DataFrame, *, n_minhash: int = 12,
         .select("doc_id", F.col("bs.band").alias("band"),
                 F.col("bs.sig").alias("sig")))
 
-    w = Window.partitionBy("band", "sig")
-    sized = (buckets
-             .withColumn("bsize", F.count(F.lit(1)).over(w))
-             .withColumn("bmin", F.min("doc_id").over(w)))
     if max_bucket is not None:
+        w = Window.partitionBy("band", "sig")
+        sized = (buckets
+                 .withColumn("bsize", F.count(F.lit(1)).over(w))
+                 .withColumn("bmin", F.min("doc_id").over(w)))
         hot = F.col("bsize") > max_bucket
         dropped = (sized.filter(hot)
                    .groupBy("band", "sig")
@@ -180,10 +176,11 @@ def minhash_lsh_pairs(docs: DataFrame, *, n_minhash: int = 12,
                         F.col("doc_id").alias("doc2")))
         cold = sized.filter(~hot)
     else:
-        dropped = sized.filter(F.lit(False)).select(
-            "band", "sig", F.col("bsize").alias("size"))
+        # no cap: no bucket-size window at all, and an empty report
+        dropped = buckets.filter(F.lit(False)).select(
+            "band", "sig", F.lit(0).cast("long").alias("size"))
         star = None
-        cold = sized
+        cold = buckets
     cold = scoped_cache(cold.select("doc_id", "band", "sig"))
 
     a = cold.alias("a")

@@ -26,6 +26,7 @@ from typing import Iterator
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions import nquad_term
 from ..kernel.api import expand as k_expand
 from ..kernel.canon import PoisonedDatasetError, canonical_id_map, relabel_quads
 from ..kernel.errors import JsonLdError
@@ -159,14 +160,14 @@ def envelope_doc(conv_id: str, turn_idx: int, role: str, text: str,
 
 def turn_to_quads(conv_id: str, turn_idx: int, role: str, text: str,
                   tool: str | None, ts, *, canonicalize: bool = False,
-                  mode: str = "auto", options: dict | None = None):
+                  options: dict | None = None):
     """One turn -> (quads, events). Pure function; used by the Arrow
     stage AND by driver-side tests (same kernel both places)."""
     events: list[dict] = []
     opts = {**(options or {}), "events": events}
     salt = _doc_salt(conv_id, turn_idx)
 
-    if mode in ("auto", "docs-only") and looks_like_jsonld(text):
+    if looks_like_jsonld(text):
         try:
             doc = _parse_doc_text(text)
         except ValueError:
@@ -178,8 +179,6 @@ def turn_to_quads(conv_id: str, turn_idx: int, role: str, text: str,
     else:
         doc = None
     if doc is None:
-        if mode == "docs-only":
-            return [], events
         doc = envelope_doc(conv_id, turn_idx, role, text, tool, ts)
 
     try:
@@ -228,7 +227,6 @@ def turn_to_quads(conv_id: str, turn_idx: int, role: str, text: str,
 
 
 def extract_triples(transcripts: DataFrame, *, canonicalize: bool = False,
-                    mode: str = "auto", context_loader: dict | None = None,
                     options: dict | None = None) -> DataFrame:
     """transcripts(conv_id, turn_idx, role, text, tool, ts) -> long
     rows DataFrame (TRIPLE_SCHEMA): kind='triple' rows carry the quad
@@ -239,10 +237,7 @@ def extract_triples(transcripts: DataFrame, *, canonicalize: bool = False,
     import pandas as pd
 
     spark = transcripts.sparkSession
-    base_options = dict(options or {})
-    if context_loader:
-        base_options["context_loader"] = context_loader
-    bc = spark.sparkContext.broadcast(base_options)
+    bc = spark.sparkContext.broadcast(dict(options or {}))
 
     cols = ("conv_id", "turn_idx", "kind", "graph", "subj", "pred",
             "obj_kind", "obj_value", "obj_datatype", "obj_lang")
@@ -262,7 +257,7 @@ def extract_triples(transcripts: DataFrame, *, canonicalize: bool = False,
                 turn_idx = int(turn_idx)
                 quads, events = turn_to_quads(
                     conv_id, turn_idx, role, text, tool, ts,
-                    canonicalize=canonicalize, mode=mode, options=opts)
+                    canonicalize=canonicalize, options=opts)
                 for graph, subj, pred, okind, oval, odt, olang in quads_to_rows(quads):
                     c_conv.append(conv_id)
                     c_turn.append(turn_idx)
@@ -420,7 +415,6 @@ def _envelope_triples_jvm(plain: DataFrame) -> DataFrame:
 
 
 def extract_triples_hybrid(transcripts: DataFrame, *,
-                           context_loader: dict | None = None,
                            options: dict | None = None) -> DataFrame:
     """The scale path: plain turns AND turns whose only complexity is a
     JCS-safe flat tool payload (the overwhelmingly common tool shape)
@@ -436,8 +430,7 @@ def extract_triples_hybrid(transcripts: DataFrame, *,
     # exchange serializes them behind it) — see OPTIMIZATION_r06.md.
     complex_turns = transcripts.filter(needs_kernel)
     jvm_part = _envelope_triples_jvm(plain)
-    kernel_part = extract_triples(complex_turns, context_loader=context_loader,
-                                  options=options)
+    kernel_part = extract_triples(complex_turns, options=options)
     return jvm_part.unionByName(kernel_part)
 
 
@@ -458,10 +451,6 @@ def nquad_lines(triples: DataFrame) -> DataFrame:
     xsd_string = "http://www.w3.org/2001/XMLSchema#string"
     langstring = "http://www.w3.org/1999/02/22-rdf-syntax-ns#langString"
 
-    def term(col):  # IRI or bnode
-        return F.when(col.startswith("_:"), col).otherwise(
-            F.concat(F.lit("<"), col, F.lit(">")))
-
     escaped = F.regexp_replace(
         F.regexp_replace(
             F.regexp_replace(
@@ -478,12 +467,12 @@ def nquad_lines(triples: DataFrame) -> DataFrame:
               F.concat(F.lit("^^<"), F.col("obj_datatype"), F.lit(">")))
         .otherwise(F.lit("")))
     obj = F.when(F.col("obj_kind") == "literal", literal).otherwise(
-        term(F.col("obj_value")))
+        nquad_term(F.col("obj_value")))
     graph_part = F.when(
         F.col("graph").isNull() | (F.col("graph") == ""), F.lit("")).otherwise(
-        F.concat(F.lit(" "), term(F.col("graph"))))
-    line = F.concat(term(F.col("subj")), F.lit(" "),
-                    term(F.col("pred")), F.lit(" "),
+        F.concat(F.lit(" "), nquad_term(F.col("graph"))))
+    line = F.concat(nquad_term(F.col("subj")), F.lit(" "),
+                    nquad_term(F.col("pred")), F.lit(" "),
                     obj, graph_part, F.lit(" ."))
     return triples.select(line.alias("nquad"))
 

@@ -27,13 +27,11 @@ import json
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .functions import cents, hash60, tokens
+
 
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
-
-
-def _cents(col):
-    return F.round(col * 100).cast("long")
 
 
 # =====================================================================
@@ -47,8 +45,8 @@ def q_agg_pricing_summary(spark, sf_dir):
     return (li.filter(F.col("l_shipdate") <= F.lit("1998-09-01"))
             .groupBy("l_returnflag", "l_linestatus")
             .agg(F.sum(F.col("l_quantity").cast("long")).alias("sum_qty"),
-                 F.sum(_cents(F.col("l_extendedprice"))).alias("sum_price_cents"),
-                 F.sum(_cents(F.col("l_extendedprice") * (1 - F.col("l_discount"))))
+                 F.sum(cents(F.col("l_extendedprice"))).alias("sum_price_cents"),
+                 F.sum(cents(F.col("l_extendedprice") * (1 - F.col("l_discount"))))
                  .alias("sum_disc_price_cents"),
                  F.count(F.lit(1)).alias("count_order")))
 
@@ -78,7 +76,7 @@ def q_join_broadcast_region_sales(spark, sf_dir):
             .join(F.broadcast(nat), supp.s_nationkey == nat.n_nationkey)
             .join(F.broadcast(reg), nat.n_regionkey == reg.r_regionkey)
             .groupBy("r_name")
-            .agg(F.sum(_cents(F.col("l_extendedprice") * (1 - F.col("l_discount"))))
+            .agg(F.sum(cents(F.col("l_extendedprice") * (1 - F.col("l_discount"))))
                  .alias("revenue_cents"),
                  F.countDistinct("s_suppkey").alias("n_suppliers")))
 
@@ -106,7 +104,7 @@ def q_window_top_order_per_cust(spark, sf_dir):
     return (o.withColumn("rn", F.row_number().over(w))
             .filter(F.col("rn") == 1)
             .select("o_custkey", "o_orderkey",
-                    _cents(F.col("o_totalprice")).alias("top_price_cents")))
+                    cents(F.col("o_totalprice")).alias("top_price_cents")))
 
 
 ORACLE_Q_WINDOW = """
@@ -123,7 +121,7 @@ def q_topk_orders(spark, sf_dir):
     o = load(spark, sf_dir, "orders")
     return (o.orderBy(F.col("o_totalprice").desc(), F.col("o_orderkey").asc())
             .limit(10)
-            .select("o_orderkey", _cents(F.col("o_totalprice")).alias("price_cents")))
+            .select("o_orderkey", cents(F.col("o_totalprice")).alias("price_cents")))
 
 
 ORACLE_Q_TOPK = """
@@ -206,7 +204,7 @@ def q_skew_salted_join(spark, sf_dir):
          .withColumn("salt", F.explode(F.array(*[F.lit(i) for i in range(n_salt)]))))
     return (li.join(o, (li.l_orderkey == o.o_orderkey) & (li.salt == o.salt))
             .groupBy("o_orderpriority")
-            .agg(F.sum(_cents(F.col("l_extendedprice"))).alias("revenue_cents"),
+            .agg(F.sum(cents(F.col("l_extendedprice"))).alias("revenue_cents"),
                  F.count(F.lit(1)).alias("n_items")))
 
 
@@ -417,10 +415,6 @@ WHERE n_name = 'NATION_3'
 # Training-data operators: dedup / similarity / text / multimodal
 # =====================================================================
 
-def _tokens(col):
-    return F.array_distinct(F.filter(F.split(col, " "), lambda x: x != ""))
-
-
 def doc_dedup_exact(spark, sf_dir):
     """Exact dedup: hash-groupBy on a content key (md5 of the first 60
     chars; the corpus has no full-text dups); keeper = min doc_id."""
@@ -448,9 +442,9 @@ def doc_dedup_token_jaccard(spark, sf_dir):
     # behind a generator: a plain alias would inline the tokenize into
     # the pushed-down size filter (run in the single scan task) and
     # into every downstream reference (see _shingles3)
-    d = (_spread(load(spark, sf_dir, "documents"), "doc_id")
+    d = (load_docs_wide(spark, sf_dir)
          .select("doc_id", "lang", "source",
-                 F.explode(F.array(_tokens(F.col("text")))).alias("toks"))
+                 F.explode(F.array(tokens(F.col("text")))).alias("toks"))
          .filter(F.size("toks") > 0))
     a = d.alias("a")
     b = d.alias("b")
@@ -541,7 +535,7 @@ def doc_dedup_ngram_jaccard(spark, sf_dir):
     corpus scale run the same shingle arrays through
     operators/dedup.minhash_lsh_pairs (shingle -> minhash -> band ->
     bucket join), which bounds the pair space by bucket collisions."""
-    d = _shingles3(_spread(load(spark, sf_dir, "documents"), "doc_id"))
+    d = _shingles3(load_docs_wide(spark, sf_dir))
     a = d.alias("a")
     b = d.alias("b")
     # sizes are O(1) lookups on the post-shuffle materialized arrays (a
@@ -596,84 +590,22 @@ _N_MINHASH = 12
 _N_BANDS = 3  # 4 rows per band: selective buckets, fewer false candidates
 
 
-def _hash60(col):
-    """60-bit integer from md5 hex prefix — identical in DuckDB via
-    cast(concat('0x', substr(md5(x),1,15)) as ubigint)."""
-    return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
-
-
 def doc_dedup_minhash_lsh(spark, sf_dir):
-    """MinHash(12) + LSH(3 bands x 4): shingle->minhash->band->
-    bucket-join. Docs with IDENTICAL token sets are first collapsed to
-    a min-doc_id representative (exact-dup removal belongs before
-    near-dup search — at scale the hot LSH bucket is exactly the
-    exact-dup class, and collapsing it first turns an O(c^2) bucket
-    blow-up into O(u^2) over unique shapes). Candidates = rep pairs
-    sharing any band signature; output verified with true token
-    Jaccard >= 0.5."""
-    from .operators.cachereg import release_caches, scoped_cache
-    from .operators.dedup import collapse_exact_shapes, minhash_band_structs
-    release_caches()
-    # spread the single-split scan before tokenization (test-data
-    # plumbing, _spread) so the per-row hashing parallelizes
-    d = (_spread(load(spark, sf_dir, "documents"), "doc_id")
-         .select("doc_id", _tokens(F.col("text")).alias("toks")))
-    # (the empty-toks filter lives INSIDE collapse_exact_shapes, after
-    # its generator — a caller-side filter on the unmaterialized token
-    # array would push below the spread exchange into the scan task)
-    # reps feeds three consumers (signature build + both pair sides) and
-    # buckets self-joins — cache both so the doc scan + shape collapse
-    # run once (at 100 TB: persist(DISK_ONLY) at the same two points).
-    # Shape collapse is ONE hash aggregation (min/min_by), and the band
-    # signatures are pure per-row array algebra — no token explode, no
-    # corpus x tokens exchange (operators/dedup.minhash_band_structs:
-    # same 60-bit compaction + two-minhash-per-md5 construction, bit-
-    # for-bit the signatures the DuckDB oracle reproduces)
-    reps = scoped_cache(collapse_exact_shapes(d))
-    buckets = scoped_cache(
-        reps.select("doc_id",
-                    F.explode(minhash_band_structs(
-                        F.col("toks"), _N_MINHASH, _N_BANDS)).alias("bs"))
-        .select("doc_id", F.col("bs.band").alias("band"),
-                F.col("bs.sig").alias("sig")))
-    a = buckets.alias("a")
-    b_ = buckets.alias("b")
-    # cand feeds THREE consumers (ids1, ids2, the verify join) — cache
-    # it or the bucket self-join + distinct (the pipeline's biggest
-    # exchange: all hot-bucket pairs) re-executes per consumer
-    cand = scoped_cache(
-        a.join(b_, (F.col("a.band") == F.col("b.band"))
-               & (F.col("a.sig") == F.col("b.sig"))
-               & (F.col("a.doc_id") < F.col("b.doc_id")))
-        .select(F.col("a.doc_id").alias("doc1"),
-                F.col("b.doc_id").alias("doc2"))
-        .distinct())
-    # verify with true Jaccard: |A∩B| once per pair, |A∪B| from sizes
-    # (no union array materialized). The token table is first SEMI-
-    # JOINED down to candidate doc_ids — candidates are small post-LSH
-    # while reps is corpus-sized (never broadcastable at 100 TB) — then
-    # joined UNHINTED so AQE picks broadcast only when the shrunk side
-    # actually fits.
-    ids1 = cand.select(F.col("doc1").alias("doc_id")).distinct()
-    ids2 = cand.select(F.col("doc2").alias("doc_id")).distinct()
-    da = (reps.join(ids1, "doc_id", "left_semi")
-          .select(F.col("doc_id").alias("doc1"), F.col("toks").alias("toks1")))
-    db = (reps.join(ids2, "doc_id", "left_semi")
-          .select(F.col("doc_id").alias("doc2"), F.col("toks").alias("toks2")))
-    sa, sb = F.size("toks1"), F.size("toks2")
-    inter = F.size(F.array_intersect("toks1", "toks2"))
-    union = sa + sb - inter
-    # One exact integer predicate for the verify threshold (see
-    # operators/dedup.minhash_lsh_pairs): round(I/U,4) >= 0.5 <=>
-    # 29999*I >= 9999*(sa+sb); the implied size gate (2*min >= max)
-    # prunes candidates before the per-pair intersect
-    return (cand.join(da, "doc1")
-            .join(db, "doc2")
-            .filter((F.least(sa, sb) * 2 >= F.greatest(sa, sb))
-                    & (inter.cast("long") * 29999
-                       >= (sa.cast("long") + sb) * 9999))
-            .select("doc1", "doc2",
-                    F.round(inter / union, 4).alias("jaccard")))
+    """MinHash(12) + LSH(3 bands x 4) over token sets: the cap-free
+    configuration of operators/dedup.minhash_lsh_pairs (shape collapse
+    -> minhash -> band -> bucket self-join -> true-Jaccard verify).
+    Docs with IDENTICAL token sets are first collapsed to a min-doc_id
+    representative (exact-dup removal belongs before near-dup search —
+    at scale the hot LSH bucket is exactly the exact-dup class, and
+    collapsing it first turns an O(c^2) bucket blow-up into O(u^2) over
+    unique shapes). Candidates = rep pairs sharing any band signature;
+    output verified with true token Jaccard >= 0.5."""
+    from .operators.dedup import minhash_lsh_pairs
+
+    d = (load_docs_wide(spark, sf_dir)
+         .select("doc_id", tokens(F.col("text")).alias("toks")))
+    return minhash_lsh_pairs(d, n_minhash=_N_MINHASH, n_bands=_N_BANDS,
+                             threshold=0.5)[0]
 
 
 ORACLE_DOC_MINHASH = f'''
@@ -736,8 +668,8 @@ def doc_dedup_minhash_capped(spark, sf_dir):
     The oracle replicates the cap + star logic exactly."""
     from .operators.dedup import minhash_lsh_pairs
 
-    d = (_spread(load(spark, sf_dir, "documents"), "doc_id")
-         .select("doc_id", _tokens(F.col("text")).alias("toks")))
+    d = (load_docs_wide(spark, sf_dir)
+         .select("doc_id", tokens(F.col("text")).alias("toks")))
     pairs, _dropped = minhash_lsh_pairs(
         d, n_minhash=_N_MINHASH, n_bands=_N_BANDS, threshold=0.5,
         max_bucket=_MAX_BUCKET)
@@ -820,8 +752,7 @@ def doc_dedup_ngram_minhash(spark, sf_dir):
     candidates with true shingle-set Jaccard >= 0.5."""
     from .operators.dedup import minhash_lsh_pairs
 
-    d = _shingles3(_spread(load(spark, sf_dir, "documents"),
-                           "doc_id")).select("doc_id", "sh")
+    d = _shingles3(load_docs_wide(spark, sf_dir)).select("doc_id", "sh")
     pairs, _dropped = minhash_lsh_pairs(
         d, n_minhash=_N_MINHASH, n_bands=_N_BANDS, threshold=0.5,
         max_bucket=_MAX_BUCKET, toks_col="sh")
@@ -849,8 +780,8 @@ def doc_dedup_components(spark, sf_dir):
     component labeling itself."""
     from .operators.dedup import dedup_components, minhash_lsh_pairs
 
-    d = (_spread(load(spark, sf_dir, "documents"), "doc_id")
-         .select("doc_id", _tokens(F.col("text")).alias("toks")))
+    d = (load_docs_wide(spark, sf_dir)
+         .select("doc_id", tokens(F.col("text")).alias("toks")))
     pairs, _dropped = minhash_lsh_pairs(
         d, n_minhash=_N_MINHASH, n_bands=_N_BANDS, threshold=0.5,
         max_bucket=_MAX_BUCKET)
@@ -874,29 +805,25 @@ SELECT node AS doc_id, MIN(comp) AS component FROM reach GROUP BY node
 
 
 def load_docs_wide(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """documents table spread across the session's shuffle partitions.
-
-    TEST-DATA PLUMBING, not an engine strategy: the sf* corpora are
-    ONE parquet file = one input split, so a narrow per-row-heavy
-    query (gram hashing, BPE regex, simhash) would serialize on a
-    single core here. Real 100 TB inputs arrive as thousands of
-    splits and need no repartition — same reasoning as the embeddings
-    queries' documented spread. The partition count is EXPLICIT so AQE
-    does not coalesce the small test corpus back into one partition
-    (which would re-serialize the compute)."""
-    n = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    return load(spark, sf_dir, "documents").repartition(n, "doc_id")
+    """documents table hash-spread on doc_id across the cores (see
+    _spread) — every documents query with a per-row-heavy stage starts
+    here."""
+    return _spread(load(spark, sf_dir, "documents"), "doc_id")
 
 
 def _spread(df: DataFrame, *cols: str) -> DataFrame:
     """Hash-spread a single-split test corpus across the cores before a
-    per-row-heavy stage (Python kernel, canonize, heavy string build).
-    Same TEST-DATA PLUMBING rationale as load_docs_wide: the sf*
-    corpora are ONE parquet file = one input split, which would
-    serialize the stage on a single core; real 100 TB inputs arrive as
-    thousands of splits and need no repartition. Hash partitioning on
-    the id columns (not round-robin) avoids the sort-before-repartition
-    pass and is retry-deterministic."""
+    per-row-heavy stage (Python kernel, canonize, gram hashing, BPE
+    regex, heavy string build).
+
+    TEST-DATA PLUMBING, not an engine strategy: the sf* corpora are
+    ONE parquet file = one input split, which would serialize the
+    stage on a single core; real 100 TB inputs arrive as thousands of
+    splits and need no repartition. The partition count is EXPLICIT so
+    AQE does not coalesce the small test corpus back into one partition
+    (which would re-serialize the compute). Hash partitioning on the id
+    columns (not round-robin) avoids the sort-before-repartition pass
+    and is retry-deterministic."""
     n = df.sparkSession.sparkContext.defaultParallelism
     return df.repartition(n, *cols)
 
@@ -912,7 +839,7 @@ def doc_simhash(spark, sf_dir):
     unchanged). Token hashes are materialized behind a generator so
     the tokenize+md5 runs once per row after the spread (see
     _shingles3 on CollapseProject inlining)."""
-    hs_expr = F.transform(_tokens(F.col("text")), lambda t: _hash60(t))
+    hs_expr = F.transform(tokens(F.col("text")), lambda t: hash60(t))
     d = (load_docs_wide(spark, sf_dir)
          .select("doc_id", F.explode(F.array(hs_expr)).alias("hs"))
          .filter(F.size("hs") > 0))
@@ -1011,7 +938,7 @@ def doc_fingerprint(spark, sf_dir):
     g = d.select("doc_id", F.explode(F.array(grams_expr)).alias("grams"))
     return g.select(
         "doc_id",
-        F.array_min(F.transform("grams", lambda g: _hash60(g)))
+        F.array_min(F.transform("grams", lambda g: hash60(g)))
         .alias("fingerprint"),
         F.size(F.array_distinct("grams")).cast("long").alias("n_grams"))
 
@@ -1629,7 +1556,7 @@ def _docs_as_transcripts(spark, sf_dir):
     text as the turn text, no tool, no ts. Texts that would parse as
     embedded JSON-LD are excluded so every row takes the envelope path
     (the filter is replicated verbatim in the oracle)."""
-    d = _spread(load(spark, sf_dir, "documents"), "doc_id")
+    d = load_docs_wide(spark, sf_dir)
     lead = F.substring(F.ltrim(F.col("text")), 1, 1)
     return (d.filter(~lead.isin("{", "["))
             .select(F.concat(F.lit("doc-"), F.col("doc_id")).alias("conv_id"),
@@ -1712,7 +1639,7 @@ def kg_canonize_documents(spark, sf_dir):
 
     # spread the single-split scan before the per-document canonize
     # kernel (test-data plumbing, see _spread)
-    d = _spread(load(spark, sf_dir, "documents"), "doc_id")
+    d = load_docs_wide(spark, sf_dir)
     doc_text = F.concat(
         F.lit('{"@context":{"@vocab":"https://example.org/vocab#"},'
               '"@id":"https://example.org/doc/'),
@@ -1773,7 +1700,7 @@ def kg_canonize_poison(spark, sf_dir):
     from .operators.pipeline import extract_triples
 
     # spread before the canonize kernel (test-data plumbing, _spread)
-    d = _spread(load(spark, sf_dir, "documents"), "doc_id")
+    d = load_docs_wide(spark, sf_dir)
     clean_text = F.concat(
         F.lit('{"@context":{"@vocab":"https://example.org/vocab#"},'
               '"@id":"https://example.org/doc/'),
@@ -1823,7 +1750,7 @@ def kg_extract_poison_depth(spark, sf_dir):
 
     # spread BEFORE building the 250 KB deep_text strings so both the
     # string build and the kernel parallelize (test-data plumbing)
-    d = _spread(load(spark, sf_dir, "documents"), "doc_id")
+    d = load_docs_wide(spark, sf_dir)
     clean_text = F.concat(
         F.lit('{"@context":{"@vocab":"https://example.org/vocab#"},'
               '"@id":"https://example.org/doc/'),

@@ -49,16 +49,21 @@ def test_dedup_verify_join_has_no_broadcast_hint(spark):
     """Round-3 fix: the LSH verify joins must not HINT a broadcast of
     the corpus-sized rep token table — the analyzed plan carries no
     broadcast hints at all; AQE may still choose broadcast at runtime
-    for the post-semi-join (small) side, which is the point."""
+    for the post-semi-join (small) side, which is the point. The
+    uncapped query builds no bucket-size window: its executed plan has
+    no Window node."""
     from jsonld_js_spark.queries import (
         doc_dedup_minhash_capped,
         doc_dedup_minhash_lsh,
     )
 
     for fn in (doc_dedup_minhash_lsh, doc_dedup_minhash_capped):
-        analyzed = fn(spark, SF)._jdf.queryExecution().analyzed().toString()
+        df = fn(spark, SF)
+        analyzed = df._jdf.queryExecution().analyzed().toString()
         assert "ResolvedHint" not in analyzed and \
             "UnresolvedHint" not in analyzed, fn.__name__
+        if fn is doc_dedup_minhash_lsh:
+            assert "Window" not in _plan(df), fn.__name__
 
 
 def test_lsh_topk_plan_is_jvm_side_equi_join(spark):

@@ -204,7 +204,8 @@ def test_token_demo_pairs_contained_in_minhash_scale_path(spark):
     from pyspark.sql import functions as F
     from pyspark.sql.window import Window
 
-    from jsonld_js_spark.queries import (_tokens, doc_dedup_minhash_lsh,
+    from jsonld_js_spark.functions import tokens
+    from jsonld_js_spark.queries import (doc_dedup_minhash_lsh,
                                          doc_dedup_token_jaccard, load)
 
     demo = {(r["doc1"], r["doc2"])
@@ -213,7 +214,7 @@ def test_token_demo_pairs_contained_in_minhash_scale_path(spark):
              for r in doc_dedup_minhash_lsh(spark, SF_DIR).collect()}
 
     d = (load(spark, SF_DIR, "documents")
-         .select("doc_id", _tokens(F.col("text")).alias("toks"))
+         .select("doc_id", tokens(F.col("text")).alias("toks"))
          .filter(F.size("toks") > 0))
     shape = F.md5(F.concat_ws("\x1f", F.array_sort("toks"))).alias("shape")
     rep = {r["doc_id"]: r["rep"]
