@@ -7,7 +7,11 @@ so plan-shape claims in OPTIMIZATION_r*.md are checkable offline.
 
 Usage:
     python bench_extra.py [--reps 3] [--plans-dir plans/r06]
-                          [--suffix before|after] [--no-plans] [query ...]
+                          [--suffix before|after] [--out timings.json]
+                          [query ...]
+
+Plans are dumped only when ``--plans-dir`` is given; without it the
+harness only times the queries.
 """
 
 from __future__ import annotations

@@ -1,4 +1,5 @@
 """Column-level helper functions (all JVM-side pyspark.sql.functions
 compositions — nothing here crosses into Python at runtime)."""
 
-from .columns import cents, hash60, nquad_term, tokens  # noqa: F401
+from .columns import (cents, hash60, mention_tokens, nquad_term,  # noqa: F401
+                      tokens, words)

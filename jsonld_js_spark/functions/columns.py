@@ -10,10 +10,26 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
+def words(col, pattern: str = " ") -> Column:
+    """Non-empty pieces of ``col`` split on the regex ``pattern``, in
+    order. ``array_remove`` drops the empty pieces without a lambda, so
+    the split stays under whole-stage codegen (a ``F.filter`` is a
+    higher-order function and falls back). DuckDB oracle twin:
+    list_filter(string_split(...), x -> x <> '')."""
+    return F.array_remove(F.split(col, pattern), "")
+
+
 def tokens(col) -> Column:
     """Distinct whitespace tokens (engine-standard tokenization; the
     DuckDB oracle twin is list_distinct(list_filter(string_split(...))))."""
-    return F.array_distinct(F.filter(F.split(col, " "), lambda x: x != ""))
+    return F.array_distinct(words(col))
+
+
+def mention_tokens(text) -> Column:
+    """Distinct lower-cased ``[a-z0-9_]+`` tokens of a text: the entity
+    linker's mention tokenizer, shared by the batch and streaming
+    linkers."""
+    return F.array_distinct(words(F.lower(text), "[^a-z0-9_]+"))
 
 
 def hash60(col) -> Column:

@@ -1,18 +1,23 @@
 """Near-duplicate detection operators — the 100-TB scale path.
 
-``minhash_lsh_pairs`` is the ONE MinHash+LSH candidate generator: every
-LSH dedup query configures it instead of re-implementing it.
-``doc_dedup_minhash_lsh`` runs it without a cap; the capped queries
-(``doc_dedup_minhash_capped``, ``doc_dedup_ngram_minhash``,
-``doc_dedup_components``) set the HOT-BUCKET CAP. An LSH bucket of size
-c contributes c·(c-1)/2 candidate pairs; a single degenerate bucket
-(boilerplate, empty-ish docs, template spam) turns the whole job
-quadratic. With ``max_bucket`` set, buckets larger than the cap
-contribute only a star around their smallest doc_id (c-1 pairs — every
-member still pairs with the representative, so connected-component
-dedup keeps the full cluster) and the drop is REPORTED, never silent:
-the returned DataFrame is accompanied by a ``dropped_buckets``
-DataFrame listing (band, sig, size) for every capped bucket.
+Every LSH near-dup operator is its own signatures and its own exact
+predicate around two shared stages: :func:`lsh_candidates` (bucket
+rows -> candidate pairs from ONE bucket self-join, plus the report of
+dropped buckets) and :func:`verify_sides` (candidates + corpus -> both
+sides' values, semi-joined down before an unhinted join).
+``minhash_lsh_pairs`` (token-set Jaccard) and ``cosine_neardup_pairs``
+(embedding cosine) are the two operators; every LSH dedup query
+configures one of them.
+
+HOT-BUCKET CAP: an LSH bucket of size c contributes c·(c-1)/2
+candidate pairs; a single degenerate bucket (boilerplate, empty-ish
+docs, template spam) turns the whole job quadratic. With
+``max_bucket`` set, buckets larger than the cap contribute only a star
+around their smallest id (c-1 pairs — every member still pairs with
+the representative, so connected-component dedup keeps the full
+cluster) and the drop is REPORTED, never silent: the pairs come with a
+``dropped_buckets`` DataFrame listing (band, sig, size) for every
+capped bucket.
 
 Exact-duplicate token-set classes are collapsed to a min-doc_id
 representative BEFORE hashing (exact dedup belongs before near-dup
@@ -121,6 +126,64 @@ def collapse_exact_shapes(d: DataFrame) -> DataFrame:
             .select("doc_id", "toks"))
 
 
+def lsh_candidates(buckets: DataFrame,
+                   max_bucket: int | None) -> tuple[DataFrame, DataFrame]:
+    """The shared candidate stage: ``(id, band, sig)`` bucket rows ->
+    (cached distinct ``(id1, id2)`` pairs with id1 < id2, the
+    ``(band, sig, size)`` dropped-bucket report). Capped buckets become
+    stars (module docstring); the bucket-size Window is built only when
+    ``max_bucket`` is set, and uncapped the report is empty."""
+    if max_bucket is not None:
+        w = Window.partitionBy("band", "sig")
+        sized = (buckets
+                 .withColumn("bsize", F.count(F.lit(1)).over(w))
+                 .withColumn("bmin", F.min("id").over(w)))
+        hot = F.col("bsize") > max_bucket
+        dropped = (sized.filter(hot)
+                   .groupBy("band", "sig")
+                   .agg(F.max("bsize").alias("size")))
+        star = (sized.filter(hot & (F.col("id") != F.col("bmin")))
+                .select(F.col("bmin").alias("id1"), F.col("id").alias("id2")))
+        cold = sized.filter(~hot)
+    else:
+        dropped = buckets.filter(F.lit(False)).select(
+            "band", "sig", F.lit(0).cast("long").alias("size"))
+        star = None
+        cold = buckets
+    # the bucket table feeds BOTH sides of the self-join (and, capped,
+    # the star/dropped branches share its lineage): cache it or the
+    # per-row signature expression evaluates once per side
+    cold = scoped_cache(cold.select("id", "band", "sig"))
+
+    a = cold.alias("a")
+    b = cold.alias("b")
+    cand = (a.join(b, (F.col("a.band") == F.col("b.band"))
+                   & (F.col("a.sig") == F.col("b.sig"))
+                   & (F.col("a.id") < F.col("b.id")))
+            .select(F.col("a.id").alias("id1"), F.col("b.id").alias("id2")))
+    if star is not None:
+        cand = cand.unionByName(star)
+    # cand feeds THREE consumers (both verify_sides semi-joins and the
+    # verify join) — cache it or the self-join + distinct re-executes
+    # per consumer
+    return scoped_cache(cand.distinct()), dropped
+
+
+def verify_sides(cand: DataFrame, corpus: DataFrame) -> DataFrame:
+    """The shared verify stage: ``(id1, id2)`` candidates + an
+    ``(id, v)`` corpus -> ``(id1, id2, v1, v2)`` for the caller's exact
+    predicate. The corpus is semi-joined down to candidate ids (small
+    post-LSH) and then joined UNHINTED: AQE broadcasts a shrunk side
+    when it fits; the corpus-sized table is never broadcast."""
+    def side(n):
+        ids = cand.select(F.col(f"id{n}").alias("id")).distinct()
+        return (corpus.join(ids, "id", "left_semi")
+                .select(F.col("id").alias(f"id{n}"),
+                        F.col("v").alias(f"v{n}")))
+    return (cand.join(side(1), "id1").join(side(2), "id2")
+            .select("id1", "id2", "v1", "v2"))
+
+
 def minhash_lsh_pairs(docs: DataFrame, *, n_minhash: int = 12,
                       n_bands: int = 3, threshold: float = 0.5,
                       max_bucket: int | None = None,
@@ -156,57 +219,14 @@ def minhash_lsh_pairs(docs: DataFrame, *, n_minhash: int = 12,
         "doc_id",
         F.explode(minhash_band_structs(F.col("toks"), n_minhash, n_bands))
         .alias("bs"))
-        .select("doc_id", F.col("bs.band").alias("band"),
+        .select(F.col("doc_id").alias("id"), F.col("bs.band").alias("band"),
                 F.col("bs.sig").alias("sig")))
+    cand, dropped = lsh_candidates(buckets, max_bucket)
+    sides = verify_sides(cand, reps.select(F.col("doc_id").alias("id"),
+                                           F.col("toks").alias("v")))
 
-    if max_bucket is not None:
-        w = Window.partitionBy("band", "sig")
-        sized = (buckets
-                 .withColumn("bsize", F.count(F.lit(1)).over(w))
-                 .withColumn("bmin", F.min("doc_id").over(w)))
-        hot = F.col("bsize") > max_bucket
-        dropped = (sized.filter(hot)
-                   .groupBy("band", "sig")
-                   .agg(F.max("bsize").alias("size")))
-        # hot buckets degrade to a star around the smallest member:
-        # candidate generation stays linear in bucket size and the
-        # cluster stays connected for component-based dedup
-        star = (sized.filter(hot & (F.col("doc_id") != F.col("bmin")))
-                .select(F.col("bmin").alias("doc1"),
-                        F.col("doc_id").alias("doc2")))
-        cold = sized.filter(~hot)
-    else:
-        # no cap: no bucket-size window at all, and an empty report
-        dropped = buckets.filter(F.lit(False)).select(
-            "band", "sig", F.lit(0).cast("long").alias("size"))
-        star = None
-        cold = buckets
-    cold = scoped_cache(cold.select("doc_id", "band", "sig"))
-
-    a = cold.alias("a")
-    b_ = cold.alias("b")
-    cand = (a.join(b_, (F.col("a.band") == F.col("b.band"))
-                   & (F.col("a.sig") == F.col("b.sig"))
-                   & (F.col("a.doc_id") < F.col("b.doc_id")))
-            .select(F.col("a.doc_id").alias("doc1"),
-                    F.col("b.doc_id").alias("doc2")))
-    if star is not None:
-        cand = cand.unionByName(star)
-    # cand feeds THREE consumers (ids1, ids2, the verify join) — cache
-    # it or the bucket self-join + distinct re-executes per consumer
-    cand = scoped_cache(cand.distinct())
-
-    # semi-join the corpus-sized rep token table down to candidate ids
-    # (small post-LSH), then join UNHINTED: AQE broadcasts the shrunk
-    # side when it fits; the full reps table is never broadcast
-    ids1 = cand.select(F.col("doc1").alias("doc_id")).distinct()
-    ids2 = cand.select(F.col("doc2").alias("doc_id")).distinct()
-    da = (reps.join(ids1, "doc_id", "left_semi")
-          .select(F.col("doc_id").alias("doc1"), F.col("toks").alias("toks1")))
-    db = (reps.join(ids2, "doc_id", "left_semi")
-          .select(F.col("doc_id").alias("doc2"), F.col("toks").alias("toks2")))
-    sa, sb = F.size("toks1"), F.size("toks2")
-    inter = F.size(F.array_intersect("toks1", "toks2"))
+    sa, sb = F.size("v1"), F.size("v2")
+    inter = F.size(F.array_intersect("v1", "v2"))
     union = sa + sb - inter
     # The verify threshold as ONE exact integer predicate (no float
     # division, one intersect per candidate instead of the pushed-down
@@ -222,10 +242,8 @@ def minhash_lsh_pairs(docs: DataFrame, *, n_minhash: int = 12,
                  >= F.greatest(sa, sb).cast("long") * num)
     int_pred = (inter.cast("long") * (20000 + num)
                 >= (sa.cast("long") + sb) * num)
-    pairs = (cand.join(da, "doc1")
-             .join(db, "doc2")
-             .filter(size_gate & int_pred)
-             .select("doc1", "doc2",
+    pairs = (sides.filter(size_gate & int_pred)
+             .select(F.col("id1").alias("doc1"), F.col("id2").alias("doc2"),
                      F.round(inter / union, 4).alias("jaccard")))
     return pairs, dropped
 
@@ -233,18 +251,12 @@ def minhash_lsh_pairs(docs: DataFrame, *, n_minhash: int = 12,
 def cosine_neardup_pairs(embeddings: DataFrame, *, threshold: float = 0.9,
                          bits: int = 64, bands: int = 4, dims: int = 64,
                          max_bucket: int | None = None,
-                         id_col: str = "vec_id", vec_col: str = "embedding",
-                         seed: int = 42,
                          release: bool = True) -> tuple[DataFrame, DataFrame]:
-    """Embedding-cosine near-duplicate pairs — the vector analogue of
-    :func:`minhash_lsh_pairs`. Candidates come from a banded
-    signed-random-projection LSH SELF-join (shuffle bounded by bucket
-    collisions, never the N^2 cross join); the exact cosine verify runs
-    only on candidates, with the corpus semi-joined down to candidate
-    ids first so the full vector table is never broadcast. Hot buckets
-    degrade to a star around the min-id member (linear, component-
-    connected) and are REPORTED via the second returned DataFrame
-    (band, sig, size) — same contract as minhash_lsh_pairs.
+    """Embedding-cosine near-duplicate pairs over a ``(vec_id,
+    embedding)`` corpus — the vector analogue of
+    :func:`minhash_lsh_pairs`: banded signed-random-projection
+    signatures through the same :func:`lsh_candidates` and
+    :func:`verify_sides` stages, verified by exact cosine.
 
     Returns ((id1, id2, cosine) with id1 < id2 and cosine >= threshold,
     dropped_buckets). ``release=False``: see minhash_lsh_pairs."""
@@ -254,66 +266,18 @@ def cosine_neardup_pairs(embeddings: DataFrame, *, threshold: float = 0.9,
         release_caches()  # drop the previous pipeline's scoped caches
 
     # cache the cast corpus: it feeds the signature build AND both
-    # verify semi-joins below — uncached, the 64-dot-product signature
-    # DAG re-executes for every consumer (mirrors minhash reps caching)
+    # verify semi-joins — uncached, the 64-dot-product signature DAG
+    # re-executes for every consumer (mirrors minhash reps caching)
     e = scoped_cache(
-        _as_double(embeddings.select(F.col(id_col).alias("vec_id"),
-                                     F.col(vec_col).alias("v")), "v"))
-    coefs = _plane_coefs(dims, bits, seed)
-    sig = _signatures(e, coefs, id_col="vec_id", vec_col="v",
-                      bands=bands, bits=bits)
-
-    w = Window.partitionBy("band", "sig")
-    sized = (sig.withColumn("bsize", F.count(F.lit(1)).over(w))
-             .withColumn("bmin", F.min("vec_id").over(w)))
-    if max_bucket is not None:
-        hot = F.col("bsize") > max_bucket
-        dropped = (sized.filter(hot)
-                   .groupBy("band", "sig")
-                   .agg(F.max("bsize").alias("size")))
-        star = (sized.filter(hot & (F.col("vec_id") != F.col("bmin")))
-                .select(F.col("bmin").alias("id1"),
-                        F.col("vec_id").alias("id2")))
-        cold = sized.filter(~hot)
-    else:
-        dropped = sized.filter(F.lit(False)).select(
-            "band", "sig", F.col("bsize").alias("size"))
-        star = None
-        cold = sized
-    # cache the signature table: it feeds BOTH sides of the candidate
-    # self-join (plus the star/dropped branches upstream share sized's
-    # lineage) — without this the per-row bit-signature expression tree
-    # evaluates twice (mirrors minhash cold caching)
-    cold = scoped_cache(cold.select("vec_id", "band", "sig"))
-
-    a = cold.alias("a")
-    b_ = cold.alias("b")
-    cand = (a.join(b_, (F.col("a.band") == F.col("b.band"))
-                   & (F.col("a.sig") == F.col("b.sig"))
-                   & (F.col("a.vec_id") < F.col("b.vec_id")))
-            .select(F.col("a.vec_id").alias("id1"),
-                    F.col("b.vec_id").alias("id2")))
-    if star is not None:
-        cand = cand.unionByName(star)
-    # cand feeds THREE consumers (ids1, ids2, the verify join) — cache
-    # it or the signature self-join + distinct re-executes per consumer
-    cand = scoped_cache(cand.distinct())
-
-    # semi-join the corpus down to candidate ids before the verify join
-    # (candidates are small post-LSH); join UNHINTED so AQE broadcasts
-    # the shrunk side only when it fits
-    ids1 = cand.select(F.col("id1").alias("vec_id")).distinct()
-    ids2 = cand.select(F.col("id2").alias("vec_id")).distinct()
-    va = (e.join(ids1, "vec_id", "left_semi")
-          .select(F.col("vec_id").alias("id1"), F.col("v").alias("v1")))
-    vb = (e.join(ids2, "vec_id", "left_semi")
-          .select(F.col("vec_id").alias("id2"), F.col("v").alias("v2")))
-    pairs = (cand.join(va, "id1").join(vb, "id2")
-             .select("id1", "id2",
-                     (F.round(_cosine("v1", "v2"), 6) + F.lit(0.0))
-                     .alias("cosine"))
-             .filter(F.col("cosine") >= threshold)
-             .select("id1", "id2", "cosine"))
+        _as_double(embeddings.select(F.col("vec_id").alias("id"),
+                                     F.col("embedding").alias("v")), "v"))
+    sig = _signatures(e, _plane_coefs(dims, bits), id_col="id",
+                      vec_col="v", bands=bands, bits=bits)
+    cand, dropped = lsh_candidates(sig, max_bucket)
+    cosine = F.round(_cosine("v1", "v2"), 6) + F.lit(0.0)
+    pairs = (verify_sides(cand, e)
+             .select("id1", "id2", cosine.alias("cosine"))
+             .filter(F.col("cosine") >= threshold))
     return pairs, dropped
 
 

@@ -23,14 +23,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions import mention_tokens
+
 MENTIONS_PRED = "https://example.org/vocab#mentions"
 
 
 def _mention_tokens(transcripts: DataFrame) -> DataFrame:
-    toks = F.explode(
-        F.array_distinct(
-            F.filter(F.split(F.lower(F.col("text")), "[^a-z0-9_]+"),
-                     lambda x: x != ""))).alias("token")
+    toks = F.explode(mention_tokens(F.col("text"))).alias("token")
     return transcripts.select("conv_id", "turn_idx", toks)
 
 

@@ -1,5 +1,9 @@
 """Similarity search over embedding columns.
 
+Fixed column contract: the corpus is ``(vec_id, embedding)``, queries
+are ``(query_id, embedding)``, and IVF cells are the corpus's
+``label`` column. Top-k results are ``(query_id, vec_id, cosine)``.
+
 - :func:`brute_topk` — exact cosine top-k: `F.zip_with`/`F.aggregate`
   column algebra, no UDF; the correctness baseline (O(N·Q)).
 - :func:`lsh_topk` — the scale path: signed-random-projection LSH.
@@ -8,8 +12,12 @@
   bucket equi-join (shuffle bounded by collisions, not N·Q), and the
   exact cosine re-rank runs only on candidates. At 100 TB the bucket
   join is the only shuffle and AQE handles hot buckets.
+- :func:`ivf_topk` — probe the nearest ``label`` cells, exact search
+  inside them; :func:`kmeans_cells` builds such cells.
 
-Recall is validated against brute force in tests/test_simsearch.py.
+All three top-k operators end in the same per-query ``row_number``
+tail (:func:`_topk`). Recall is validated against brute force in
+tests/test_simsearch.py.
 """
 
 from __future__ import annotations
@@ -35,24 +43,26 @@ def _cosine(a: str, b: str):
     return dot / (na * nb)
 
 
-def brute_topk(embeddings: DataFrame, queries: DataFrame, k: int = 10,
-               id_col: str = "vec_id", vec_col: str = "embedding",
-               query_id_col: str = "query_id") -> DataFrame:
-    """Exact cosine top-k of every query against the corpus.
-
-    queries: (query_id, embedding). Queries are broadcast (they are
-    the small side by construction)."""
-    e = _as_double(embeddings, vec_col)
-    q = _as_double(queries, vec_col).withColumnRenamed(vec_col, "_qv")
-    joined = e.crossJoin(F.broadcast(q)).filter(
-        F.col(id_col) != F.col(query_id_col))
-    scored = joined.select(
-        query_id_col, id_col,
-        F.round(_cosine(vec_col, "_qv"), 6).alias("cosine"))
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("cosine").desc(), F.col(id_col).asc())
+def _topk(scored: DataFrame, k: int) -> DataFrame:
+    """Per-query top-k of (query_id, vec_id, cosine) rows: highest
+    cosine first, ties to the lower vec_id."""
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("cosine").desc(), F.col("vec_id").asc())
     return (scored.withColumn("rn", F.row_number().over(w))
             .filter(F.col("rn") <= k).drop("rn"))
+
+
+def brute_topk(embeddings: DataFrame, queries: DataFrame,
+               k: int = 10) -> DataFrame:
+    """Exact cosine top-k of every query against the corpus. Queries
+    are broadcast (they are the small side by construction)."""
+    e = _as_double(embeddings, "embedding")
+    q = _as_double(queries, "embedding").withColumnRenamed("embedding", "_qv")
+    joined = e.crossJoin(F.broadcast(q)).filter(
+        F.col("vec_id") != F.col("query_id"))
+    return _topk(joined.select(
+        "query_id", "vec_id",
+        F.round(_cosine("embedding", "_qv"), 6).alias("cosine")), k)
 
 
 def _plane_coefs(dims: int, bits: int, seed: int = 42) -> list[list[float]]:
@@ -100,9 +110,7 @@ def _signatures(df: DataFrame, coefs: list[list[float]], *, id_col: str,
 
 def lsh_topk(embeddings: DataFrame, queries: DataFrame, k: int = 10,
              *, bits: int = 32, bands: int = 8, dims: int = 64,
-             max_bucket: int | None = None,
-             id_col: str = "vec_id", vec_col: str = "embedding",
-             query_id_col: str = "query_id", seed: int = 42) -> DataFrame:
+             max_bucket: int | None = None) -> DataFrame:
     """Banded signed-random-projection ANN: candidates share at least
     one band signature with the query; exact cosine re-ranks them.
 
@@ -122,40 +130,35 @@ def lsh_topk(embeddings: DataFrame, queries: DataFrame, k: int = 10,
     contribute bucket_size x queries candidates); drops lower recall
     for vectors in dropped buckets, never correctness of the re-rank.
     """
-    coefs = _plane_coefs(dims, bits, seed)
-    e = _as_double(embeddings, vec_col)
-    q = _as_double(queries, vec_col)
+    coefs = _plane_coefs(dims, bits)
+    e = _as_double(embeddings, "embedding")
+    q = _as_double(queries, "embedding")
 
-    e_sig = _signatures(e, coefs, id_col=id_col, vec_col=vec_col,
+    e_sig = _signatures(e, coefs, id_col="vec_id", vec_col="embedding",
                         bands=bands, bits=bits)
-    q_sig = _signatures(q, coefs, id_col=query_id_col, vec_col=vec_col,
+    q_sig = _signatures(q, coefs, id_col="query_id", vec_col="embedding",
                         bands=bands, bits=bits)
     if max_bucket is not None:
         wb = Window.partitionBy("band", "sig")
         e_sig = (e_sig.withColumn("bsize", F.count(F.lit(1)).over(wb))
                  .filter(F.col("bsize") <= max_bucket).drop("bsize"))
     cand = (e_sig.join(q_sig, ["band", "sig"])
-            .select(id_col, query_id_col).distinct())
+            .select("vec_id", "query_id").distinct())
 
     joined = (cand
-              .join(e.select(id_col, F.col(vec_col).alias("_ev")), id_col)
-              .join(F.broadcast(q.select(query_id_col,
-                                         F.col(vec_col).alias("_qv"))),
-                    query_id_col)
-              .filter(F.col(id_col) != F.col(query_id_col)))
-    scored = joined.select(
-        query_id_col, id_col,
-        (F.round(_cosine("_ev", "_qv"), 6) + F.lit(0.0)).alias("cosine"))
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("cosine").desc(), F.col(id_col).asc())
-    return (scored.withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") <= k).drop("rn"))
+              .join(e.select("vec_id", F.col("embedding").alias("_ev")),
+                    "vec_id")
+              .join(F.broadcast(q.select("query_id",
+                                         F.col("embedding").alias("_qv"))),
+                    "query_id")
+              .filter(F.col("vec_id") != F.col("query_id")))
+    return _topk(joined.select(
+        "query_id", "vec_id",
+        (F.round(_cosine("_ev", "_qv"), 6) + F.lit(0.0)).alias("cosine")), k)
 
 
 def ivf_topk(embeddings: DataFrame, queries: DataFrame, k: int = 10,
-             *, n_probe: int = 3, id_col: str = "vec_id",
-             vec_col: str = "embedding", query_id_col: str = "query_id",
-             label_col: str = "label",
+             *, n_probe: int = 3,
              centroid_round: int | None = None) -> DataFrame:
     """IVF-style ANN using an existing coarse partition (the `label`
     column as cells): per query, probe the n_probe nearest cell
@@ -164,45 +167,40 @@ def ivf_topk(embeddings: DataFrame, queries: DataFrame, k: int = 10,
     ``centroid_round`` rounds centroid components (use 6 for
     cross-engine reproducibility: float AVG summation order differs
     between engines; rounding pins the probe selection)."""
-    e = _as_double(embeddings, vec_col)
-    q = _as_double(queries, vec_col)
+    e = _as_double(embeddings, "embedding")
+    q = _as_double(queries, "embedding")
 
     cagg = F.avg("v")
     if centroid_round is not None:
         cagg = F.round(cagg, centroid_round)
-    centroids = (e.select(label_col, F.posexplode(vec_col).alias("dim", "v"))
-                 .groupBy(label_col, "dim").agg(cagg.alias("c"))
-                 .groupBy(label_col)
+    centroids = (e.select("label", F.posexplode("embedding").alias("dim", "v"))
+                 .groupBy("label", "dim").agg(cagg.alias("c"))
+                 .groupBy("label")
                  .agg(F.array_sort(F.collect_list(F.struct("dim", "c")))
                       .alias("pairs"))
-                 .select(label_col,
+                 .select("label",
                          F.transform("pairs", lambda p: p["c"]).alias("cv")))
     probes = (q.crossJoin(F.broadcast(centroids))
-              .select(query_id_col, label_col,
-                      _cosine(vec_col, "cv").alias("ccos")))
-    wp = Window.partitionBy(query_id_col).orderBy(
-        F.col("ccos").desc(), F.col(label_col).asc())
+              .select("query_id", "label",
+                      _cosine("embedding", "cv").alias("ccos")))
+    wp = Window.partitionBy("query_id").orderBy(
+        F.col("ccos").desc(), F.col("label").asc())
     probe_cells = (probes.withColumn("rn", F.row_number().over(wp))
                    .filter(F.col("rn") <= n_probe)
-                   .select(query_id_col, label_col))
+                   .select("query_id", "label"))
 
-    joined = (e.join(probe_cells, label_col)
-              .join(F.broadcast(q.select(query_id_col,
-                                         F.col(vec_col).alias("_qv"))),
-                    query_id_col)
-              .filter(F.col(id_col) != F.col(query_id_col)))
-    scored = joined.select(
-        query_id_col, id_col,
-        F.round(_cosine(vec_col, "_qv"), 6).alias("cosine"))
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("cosine").desc(), F.col(id_col).asc())
-    return (scored.withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") <= k).drop("rn"))
+    joined = (e.join(probe_cells, "label")
+              .join(F.broadcast(q.select("query_id",
+                                         F.col("embedding").alias("_qv"))),
+                    "query_id")
+              .filter(F.col("vec_id") != F.col("query_id")))
+    return _topk(joined.select(
+        "query_id", "vec_id",
+        F.round(_cosine("embedding", "_qv"), 6).alias("cosine")), k)
 
 
 def kmeans_cells(embeddings: DataFrame, *, k: int = 8, iterations: int = 2,
-                 id_col: str = "vec_id", vec_col: str = "embedding",
-                 dims: int = 64, round_to: int = 6) -> DataFrame:
+                 round_to: int = 6) -> DataFrame:
     """Build an IVF coarse quantizer with Lloyd's k-means, expressed as
     pure DataFrame ops — the index-BUILD step whose output feeds
     :func:`ivf_topk` as the cell column.
@@ -217,10 +215,10 @@ def kmeans_cells(embeddings: DataFrame, *, k: int = 8, iterations: int = 2,
     BROADCAST k-row centroid table (k is small by definition of a
     coarse quantizer) + one groupBy(cell) partial/final aggregation —
     no shuffle grows with k, and the corpus is scanned ``iterations+1``
-    times. Returns (id, cell).
+    times. Returns (vec_id, cell).
     """
-    e = _as_double(embeddings.select(F.col(id_col).alias("_id"),
-                                     F.col(vec_col).alias("_v")), "_v")
+    e = _as_double(embeddings.select(F.col("vec_id").alias("_id"),
+                                     F.col("embedding").alias("_v")), "_v")
     # deterministic seeds: the k lowest ids
     cents = (e.orderBy("_id").limit(k)
              .select((F.row_number().over(Window.orderBy("_id")) - 1)
@@ -258,4 +256,4 @@ def kmeans_cells(embeddings: DataFrame, *, k: int = 8, iterations: int = 2,
                      # and the corpus is scanned once per iteration
                      .localCheckpoint())
         assigned = _assign(e, new_cents)
-    return assigned.select(F.col("_id").alias(id_col), "cell")
+    return assigned.select(F.col("_id").alias("vec_id"), "cell")

@@ -27,7 +27,7 @@ import json
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .functions import cents, hash60, tokens
+from .functions import cents, hash60, tokens, words
 
 
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -511,9 +511,8 @@ def _shingles3(docs):
     element_at calls per shingle position (re-splitting the text per
     access). Generators are evaluation and pushdown barriers: split
     runs once per row, after the caller's spread."""
-    toks = F.filter(F.split(F.col("text"), " "), lambda x: x != "")
     d = (docs.select("doc_id", "lang", "source",
-                     F.explode(F.array(toks)).alias("t"))
+                     F.explode(F.array(words(F.col("text")))).alias("t"))
          .filter(F.size("t") >= 3))
     sh = F.array_distinct(F.transform(
         F.sequence(F.lit(0), F.size("t") - 3),
@@ -883,13 +882,12 @@ def doc_text_stats(spark, sf_dir):
     """Language-ID heuristic + quality scoring + token counting per
     source (the text-analysis battery, all JVM-side column functions)."""
     d = load_docs_wide(spark, sf_dir)
-    toks_expr = F.filter(F.split(F.col("text"), " "), lambda x: x != "")
     # tokenize ONCE behind a generator (n_tok is referenced three
     # times; a plain alias re-splits per reference — see _shingles3)
     d = d.select("source", "lang", F.length("text").alias("n_chars"),
                  F.length(F.regexp_replace(F.col("text"), "[^.!?,;]", ""))
                  .alias("punct"),
-                 F.explode(F.array(toks_expr)).alias("toks"))
+                 F.explode(F.array(words(F.col("text")))).alias("toks"))
     n_tok = F.size("toks")
     quality = F.when((n_tok >= 5) & (F.col("punct") * 4 <= n_tok)
                      & (F.col("n_chars") >= 30), 1).otherwise(0)
@@ -987,17 +985,14 @@ FROM embeddings, q WHERE vec_id BETWEEN 1 AND 20
 def emb_knn_brute(spark, sf_dir):
     """Brute-force cosine top-k (k=10) against vec_0 — the ANN
     baseline. Top-k via orderBy+limit (TakeOrdered)."""
+    from .operators.simsearch import _cosine
+
     e = (load(spark, sf_dir, "embeddings")
          .withColumn("embedding", F.col("embedding").cast("array<double>")))
     q = e.filter(F.col("vec_id") == 0).select(F.col("embedding").alias("qv"))
     t = e.filter(F.col("vec_id") != 0).crossJoin(F.broadcast(q))
-    dot = F.aggregate(F.zip_with("embedding", "qv", lambda a, b: a * b),
-                      F.lit(0.0), lambda acc, x: acc + x)
-    na = F.sqrt(F.aggregate(F.transform("embedding", lambda a: a * a),
-                            F.lit(0.0), lambda acc, x: acc + x))
-    nb = F.sqrt(F.aggregate(F.transform("qv", lambda a: a * a),
-                            F.lit(0.0), lambda acc, x: acc + x))
-    return (t.select("vec_id", F.round(dot / (na * nb), 6).alias("cosine"))
+    return (t.select("vec_id",
+                     F.round(_cosine("embedding", "qv"), 6).alias("cosine"))
             .orderBy(F.col("cosine").desc(), F.col("vec_id").asc())
             .limit(10))
 
@@ -1396,14 +1391,13 @@ def doc_bpe_tokens(spark, sf_dir):
     d = load_docs_wide(spark, sf_dir)
     pieces = F.regexp_extract_all(F.col("text"), F.lit(_BPE_PAT), 0)
     non_ws = F.filter(pieces, lambda p: F.trim(p) != "")
-    ws_toks = F.filter(F.split(F.col("text"), " "), lambda x: x != "")
     # run the BPE regex ONCE behind a generator: n_bpe is referenced
     # twice and a plain alias re-runs regexp_extract_all per reference
     # (CollapseProject — see _shingles3)
     g = d.select("doc_id", F.length("text").alias("n_chars"),
                  F.explode(F.array(F.struct(
                      F.size(non_ws).alias("n_bpe"),
-                     F.size(ws_toks).alias("n_ws")))).alias("c"))
+                     F.size(words(F.col("text"))).alias("n_ws")))).alias("c"))
     return g.select(
         "doc_id",
         F.col("c.n_bpe").alias("n_bpe"),
@@ -1448,20 +1442,19 @@ def doc_lang_id(spark, sf_dir):
     # tokenize ONCE behind a generator: the four profile scores each
     # reference the token array, and a plain alias would re-split the
     # text per profile (CollapseProject — see _shingles3)
-    toks_expr = F.filter(F.split(F.lower(F.col("text")), " "),
-                         lambda x: x != "")
     d = d.select("doc_id", "lang",
-                 F.explode(F.array(toks_expr)).alias("toks"))
+                 F.explode(F.array(words(F.lower(F.col("text")))))
+                 .alias("toks"))
     toks = F.col("toks")
-    def _score(words):
+    def _score(vocab):
         # F.filter builds the expression eagerly, so the closure binds now
-        return F.size(F.filter(toks, lambda x: x.isin(*words)))
+        return F.size(F.filter(toks, lambda x: x.isin(*vocab)))
 
     scored = F.array(*[
-        F.struct(_score(words).alias("score"),
+        F.struct(_score(vocab).alias("score"),
                  F.lit(len(_LANG_PROFILES) - i).alias("prio"),
                  F.lit(lang).alias("lang"))
-        for i, (lang, words) in enumerate(_LANG_PROFILES)])
+        for i, (lang, vocab) in enumerate(_LANG_PROFILES)])
     best = F.array_max(scored)
     pred = F.when(best["score"] > 0, best["lang"]).otherwise(F.lit("und"))
     return d.select("doc_id", pred.alias("pred_lang"),

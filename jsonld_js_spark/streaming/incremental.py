@@ -25,6 +25,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions import mention_tokens
 from ..sources.transcripts import TRANSCRIPT_SCHEMA
 
 
@@ -99,9 +100,7 @@ def stream_windowed_mentions(transcripts_stream: DataFrame,
     wm = transcripts_stream.withWatermark("ts", watermark)
     toks = wm.select(
         "conv_id", "turn_idx", "ts",
-        F.explode(F.array_distinct(
-            F.filter(F.split(F.lower(F.col("text")), "[^a-z0-9_]+"),
-                     lambda x: x != ""))).alias("token"))
+        F.explode(mention_tokens(F.col("text"))).alias("token"))
     ents = entities.select(F.lower(F.col("surface")).alias("token"),
                            "entity_id", "kind")
     return (toks.join(F.broadcast(ents), "token")

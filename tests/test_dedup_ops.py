@@ -3,7 +3,8 @@
 import pytest
 from pyspark.sql import functions as F
 
-from jsonld_js_spark.operators.dedup import dedup_components, minhash_lsh_pairs
+from jsonld_js_spark.operators.dedup import (dedup_components, lsh_candidates,
+                                             minhash_lsh_pairs)
 
 
 @pytest.fixture(scope="module")
@@ -51,6 +52,29 @@ def test_capped_pairs_star_and_reported(docs):
     assert len(d) >= 1 and all(r["size"] > 10 for r in d)
     # the small pair is untouched
     assert {(r["doc1"], r["doc2"]) for r in p if r["doc1"] >= 100} == {(100, 101)}
+
+
+def test_lsh_candidates_cap_star_and_report(spark):
+    """The shared candidate stage on hand-built buckets: band 0 holds a
+    5-member bucket (above the cap of 3) and a 2-member one; band 1
+    repeats the cold pair, which must come out once."""
+    rows = ([(i, 0, "hot") for i in range(1, 6)]
+            + [(10, 0, "cold"), (11, 0, "cold"),
+               (10, 1, "cold"), (11, 1, "cold")])
+    buckets = spark.createDataFrame(rows, "id long, band int, sig string")
+
+    cand, dropped = lsh_candidates(buckets, 3)
+    assert sorted(tuple(r) for r in cand.collect()) == [
+        (1, 2), (1, 3), (1, 4), (1, 5), (10, 11)]
+    assert [tuple(r) for r in dropped.collect()] == [(0, "hot", 5)]
+
+    cand, dropped = lsh_candidates(buckets, None)
+    hot = [(a, b) for a in range(1, 6) for b in range(a + 1, 6)]
+    assert sorted(tuple(r) for r in cand.collect()) == hot + [(10, 11)]
+    assert dropped.count() == 0
+    assert dropped.schema["size"].dataType.simpleString() == "bigint"
+    plan = cand._jdf.queryExecution().executedPlan().toString()
+    assert "Window" not in plan
 
 
 def test_components_connect_capped_cluster(docs):

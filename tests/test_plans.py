@@ -53,11 +53,13 @@ def test_dedup_verify_join_has_no_broadcast_hint(spark):
     uncapped query builds no bucket-size window: its executed plan has
     no Window node."""
     from jsonld_js_spark.queries import (
+        doc_dedup_embedding,
         doc_dedup_minhash_capped,
         doc_dedup_minhash_lsh,
     )
 
-    for fn in (doc_dedup_minhash_lsh, doc_dedup_minhash_capped):
+    for fn in (doc_dedup_minhash_lsh, doc_dedup_minhash_capped,
+               doc_dedup_embedding):
         df = fn(spark, SF)
         analyzed = df._jdf.queryExecution().analyzed().toString()
         assert "ResolvedHint" not in analyzed and \
@@ -142,6 +144,21 @@ def test_text_analysis_queries_stay_jvm_side(spark):
         plan = _plan(fn(spark, SF))
         assert "BatchEvalPython" not in plan and \
             "ArrowEvalPython" not in plan, fn.__name__
+
+
+def test_word_splits_stay_in_codegen(spark):
+    """Word splitting goes through functions.words / mention_tokens
+    (array_remove over split), not a lambda F.filter: a higher-order
+    function is CodegenFallback and shows up as `lambda` in the plan."""
+    from jsonld_js_spark.queries import (
+        doc_dedup_token_jaccard,
+        doc_text_stats,
+        kg_entity_link_documents,
+    )
+
+    for fn in (doc_dedup_token_jaccard, doc_text_stats,
+               kg_entity_link_documents):
+        assert "lambda" not in _plan(fn(spark, SF)), fn.__name__
 
 
 def test_kmeans_assign_broadcasts_centroids(spark):

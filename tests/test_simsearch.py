@@ -163,11 +163,11 @@ def test_kmeans_cells_deterministic_and_partitioning(spark):
 
     rows = [(i, vec(i)) for i in range(60)]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    a = kmeans_cells(df, k=4, iterations=2, dims=16)
+    a = kmeans_cells(df, k=4, iterations=2)
     got = {r["vec_id"]: r["cell"] for r in a.collect()}
     assert len(got) == 60
     assert set(got.values()) <= set(range(4))
-    b = kmeans_cells(df.repartition(7), k=4, iterations=2, dims=16)
+    b = kmeans_cells(df.repartition(7), k=4, iterations=2)
     assert {r["vec_id"]: r["cell"] for r in b.collect()} == got
-    c = kmeans_cells(df, k=4, iterations=3, dims=16)
+    c = kmeans_cells(df, k=4, iterations=3)
     assert len(c.collect()) == 60
