@@ -12,7 +12,6 @@ dictionary lookups (`expand_iri`) inside Arrow batches.
 
 from __future__ import annotations
 
-import copy
 import re as _re
 
 from .constants import KEYWORDS, is_keyword, looks_like_keyword
@@ -1053,7 +1052,3 @@ def selected_term_ctx(active_ctx: dict, term: str):
 def revert_to_previous(active_ctx: dict) -> dict:
     """Non-propagating context revert (lib/expand.js:173-199)."""
     return active_ctx.get("previousContext") or active_ctx
-
-
-def clone_active_context(active_ctx: dict) -> dict:
-    return copy.deepcopy(active_ctx)

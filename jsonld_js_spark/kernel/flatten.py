@@ -12,7 +12,6 @@ from __future__ import annotations
 from .nodemap import (
     IdentifierIssuer,
     create_node_map,
-    merge_node_map_graphs,
     merge_node_maps,
 )
 from .types import is_subject_reference
@@ -23,12 +22,3 @@ def flatten(expanded, *, issuer: IdentifierIssuer | None = None) -> list:
     default_graph = merge_node_maps(graphs)
     return [default_graph[s] for s in sorted(default_graph.keys())
             if not is_subject_reference(default_graph[s])]
-
-
-def flatten_merged(expanded, *, issuer: IdentifierIssuer | None = None) -> list:
-    """Flatten over the property-merged node map (all graphs folded);
-    the shape framing's @merged view consumes."""
-    graphs = create_node_map(expanded, issuer=issuer or IdentifierIssuer("_:b"))
-    merged = merge_node_map_graphs(graphs)
-    return [merged[s] for s in sorted(merged.keys())
-            if not is_subject_reference(merged[s])]

@@ -44,10 +44,6 @@ def is_absolute_iri(v) -> bool:
     return isinstance(v, str) and _is_absolute_str(v)
 
 
-def is_relative_iri(v) -> bool:
-    return isinstance(v, str) and not is_absolute_iri(v)
-
-
 @lru_cache(maxsize=4096)
 def parse_iri(iri: str):
     m = _URI_RE.match(iri)

@@ -7,20 +7,6 @@ values of the ``obj_kind`` column.
 
 from __future__ import annotations
 
-import math
-
-
-def is_double(v) -> bool:
-    return isinstance(v, float) and not isinstance(v, bool)
-
-
-def is_integer_number(v) -> bool:
-    if isinstance(v, bool):
-        return False
-    if isinstance(v, int):
-        return True
-    return isinstance(v, float) and v.is_integer() and abs(v) < 1e21 and not math.isnan(v)
-
 
 def is_scalar(v) -> bool:
     return isinstance(v, (str, int, float, bool))
@@ -57,12 +43,3 @@ def is_graph(v) -> bool:
 
 def is_simple_graph(v) -> bool:
     return is_graph(v) and "@id" not in v
-
-
-def is_blank_node(v) -> bool:
-    """Blank node object: no @id, or a `_:` @id (graphTypes.js:106-120)."""
-    if not isinstance(v, dict):
-        return False
-    if "@id" in v:
-        return isinstance(v["@id"], str) and v["@id"].startswith("_:")
-    return not ("@value" in v or "@set" in v or "@list" in v)

@@ -434,16 +434,3 @@ def from_rdf_nodes(triples: DataFrame, *, use_native_types: bool = False,
 
     return assembled.select(
         "graph", "subj", build_node("subj", "qs", "atts").alias("node_json"))
-
-
-def flatten_nodes(triples: DataFrame) -> DataFrame:
-    """Relational flatten (SURVEY §2.4): merge all graphs, group by
-    subject, drop reference-only subjects — groupBy + anti-join, no
-    per-document recursion."""
-    subjects_with_props = (triples.select(F.col("subj").alias("node_id"))
-                           .distinct())
-    return (from_rdf_nodes(triples)
-            .join(subjects_with_props,
-                  F.col("subj") == F.col("node_id"), "inner")
-            .drop("node_id")
-            .orderBy("subj"))

@@ -1,18 +1,19 @@
 """Multimodal column plumbing: opaque binary payloads + typed metadata.
 
-Images/audio/video ride through the engine as ``binary`` columns with
-a mime column; decode / feature-extract / resize / frame-sample are
-Arrow-batched Pandas stages over ``mapInPandas``.
+Images/audio ride through the engine as ``binary`` columns with a mime
+column; decode and feature-extract are Arrow-batched Pandas stages
+over ``mapInPandas``.
 
 Decode status in this container (no PIL/libvips/ffmpeg):
 - PNG and 16-bit PCM WAV decode is REAL — pure-stdlib implementations
   in operators/codecs.py (zlib inflate + all five PNG row filters;
   RIFF framing via the ``wave`` module), exercised end-to-end by the
   oracle-checked ``mm_decode_features`` driver query.
-- formats that require native codecs (JPEG, MP3, H.264, ...) raise
-  NotImplementedError; ``extract_binary_features`` keeps the
-  clearly-marked deterministic fake for arbitrary payloads so the
-  batching/schema plumbing stays testable on any input.
+- formats that require native codecs (JPEG, MP3, H.264, ...) are not
+  decoded: ``extract_media_features`` leaves their feature columns
+  null, and ``extract_binary_features`` keeps the clearly-marked
+  deterministic fake for arbitrary payloads so the batching/schema
+  plumbing stays testable on any input.
 """
 
 from __future__ import annotations
@@ -28,26 +29,6 @@ FEATURE_SCHEMA = "doc_id long, n_bytes long, fake_width long, fake_height long"
 MEDIA_SCHEMA = ("doc_id long, kind string, width long, height long, "
                 "channels long, sample_rate long, n_samples long, "
                 "value_sum long, n_values long")
-
-
-def decode_image(payload: bytes, mime: str) -> dict:
-    """REAL decode for PNG (stdlib zlib); other image formats need a
-    native library and raise."""
-    if mime == "image/png" or payload[:8] == b"\x89PNG\r\n\x1a\n":
-        return decode_png(payload)
-    raise NotImplementedError(f"image decode for {mime!r} requires a "
-                              "native imaging library (only PNG is "
-                              "decodable with the stdlib)")
-
-
-def decode_audio(payload: bytes, mime: str) -> dict:
-    """REAL decode for 16-bit PCM WAV (stdlib wave); compressed audio
-    formats need ffmpeg/soundfile and raise."""
-    if mime in ("audio/wav", "audio/x-wav") or payload[:4] == b"RIFF":
-        return decode_wav(payload)
-    raise NotImplementedError(f"audio decode for {mime!r} requires "
-                              "ffmpeg/soundfile (only PCM WAV is "
-                              "decodable with the stdlib)")
 
 
 def extract_media_features(df: DataFrame) -> DataFrame:
@@ -89,8 +70,8 @@ def extract_media_features(df: DataFrame) -> DataFrame:
 
 
 def _fake_dims(n_bytes: int) -> tuple[int, int]:
-    """DETERMINISTIC FAKE standing in for decode+measure. Replace with
-    decode_image(...).size in a container that has codecs."""
+    """DETERMINISTIC FAKE standing in for decode+measure of payloads in
+    formats the stdlib codecs cannot decode."""
     return n_bytes % 640, n_bytes % 480
 
 
@@ -115,20 +96,6 @@ def extract_binary_features(df: DataFrame) -> DataFrame:
             })
 
     return df.mapInPandas(run, schema=FEATURE_SCHEMA)
-
-
-def sample_frames(df: DataFrame, *, every_n_bytes: int = 1024) -> DataFrame:
-    """Frame-sampling plumbing: one output row per sampled offset
-    (stand-in for video frame extraction; offsets are real, frame
-    decode is the stub above)."""
-    from pyspark.sql import functions as F
-
-    return (df.withColumn(
-        "frame_offset",
-        F.explode(F.sequence(F.lit(0),
-                             F.greatest(F.length("payload") - 1, F.lit(0)),
-                             F.lit(every_n_bytes))))
-        .select("doc_id", "frame_offset"))
 
 
 def synthesize_media_payloads(docs: DataFrame) -> DataFrame:
