@@ -1,5 +1,12 @@
 """Near-duplicate detection operators — the 100-TB scale path.
 
+Every Jaccard threshold is one exact integer predicate,
+:func:`jaccard_at_least` (``round(I/U, 4) >= t`` without float
+division). :func:`blocked_jaccard_pairs` is the all-pairs Jaccard join
+inside (lang, source) blocks that the token and shingle demo queries
+configure; ``minhash_lsh_pairs`` verifies its LSH candidates with the
+same predicate.
+
 Every LSH near-dup operator is its own signatures and its own exact
 predicate around two shared stages: :func:`lsh_candidates` (bucket
 rows -> candidate pairs from ONE bucket self-join, plus the report of
@@ -49,6 +56,51 @@ def round4_boundary_num(threshold: float) -> int:
     if (m - 1) / 10000 >= threshold:
         m -= 1
     return 2 * m - 1
+
+
+def jaccard_at_least(v1, v2, threshold: float):
+    """(predicate, jaccard) over two DISTINCT arrays: the predicate is
+    exactly ``round(I/U, 4) >= threshold`` and ``jaccard`` is
+    ``round(I/U, 4)``, with I = |v1 ∩ v2| and U = sa + sb - I.
+
+    Integer cross-multiplication, no float division and no higher-
+    order function (the plan keeps no ``lambda``):
+      round(I/U, 4) >= t  <=>  I/U >= num/20000
+      <=>  (20000+num)*I >= num*(sa+sb)
+    preceded by the implied size gate (J <= min/max, so J >= t forces
+    min*20000 >= num*max), an O(1) compare that prunes before the
+    O(|v|) intersect. Keep the order when the predicate lands in a
+    join condition: join conditions get no common-subexpression
+    elimination, so the cheap terms must come first. Sizes are read
+    off the arrays: a precomputed size column collapses into the scan
+    projection and re-runs the tokenize per row."""
+    sa, sb = F.size(v1), F.size(v2)
+    inter = F.size(F.array_intersect(v1, v2))
+    num = round4_boundary_num(threshold)
+    gate = (F.least(sa, sb).cast("long") * 20000
+            >= F.greatest(sa, sb).cast("long") * num)
+    exact = inter.cast("long") * (20000 + num) >= (sa.cast("long") + sb) * num
+    return gate & exact, F.round(inter / (sa + sb - inter), 4)
+
+
+def blocked_jaccard_pairs(sets: DataFrame, threshold: float) -> DataFrame:
+    """All-pairs set Jaccard inside (lang, source) blocks: a
+    ``(doc_id, lang, source, toks)`` table of distinct non-empty
+    arrays -> ``(doc1, doc2, jaccard)`` with doc1 < doc2 and
+    ``round(J, 4) >= threshold``. One shuffle equi-join on the block
+    key; the residual condition runs the id order, then the size gate,
+    then the intersect (:func:`jaccard_at_least`). O(n^2) per block:
+    the MinHash-LSH operators bound the pair space at scale."""
+    a, b = sets.alias("a"), sets.alias("b")
+    pred, jaccard = jaccard_at_least(F.col("a.toks"), F.col("b.toks"),
+                                     threshold)
+    return (a.join(b, (F.col("a.lang") == F.col("b.lang"))
+                   & (F.col("a.source") == F.col("b.source"))
+                   & (F.col("a.doc_id") < F.col("b.doc_id"))
+                   & pred)
+            .select(F.col("a.doc_id").alias("doc1"),
+                    F.col("b.doc_id").alias("doc2"),
+                    jaccard.alias("jaccard")))
 
 
 def minhash_band_structs(toks_col, n_minhash: int, n_bands: int):
@@ -187,11 +239,10 @@ def verify_sides(cand: DataFrame, corpus: DataFrame) -> DataFrame:
 def minhash_lsh_pairs(docs: DataFrame, *, n_minhash: int = 12,
                       n_bands: int = 3, threshold: float = 0.5,
                       max_bucket: int | None = None,
-                      toks_col: str = "toks",
                       release: bool = True) -> tuple[DataFrame, DataFrame]:
     """(doc1, doc2, jaccard) near-dup pairs + (band, sig, size) capped
     buckets. ``docs`` carries one row per document: its ``doc_id`` and
-    a distinct token array in ``toks_col``.
+    a distinct token array in ``toks``.
 
     ``release=False`` when the CALLER already released the previous
     pipeline's scoped caches and registered caches of its own that
@@ -204,9 +255,7 @@ def minhash_lsh_pairs(docs: DataFrame, *, n_minhash: int = 12,
     # arrays after its generator barrier (a filter on an unmaterialized
     # toks expression would push below any upstream exchange and run
     # the whole tokenize in the scan task)
-    d = docs.select("doc_id", F.col(toks_col).alias("toks"))
-
-    reps = scoped_cache(collapse_exact_shapes(d))
+    reps = scoped_cache(collapse_exact_shapes(docs))
 
     # signatures are pure per-row array algebra (minhash_band_structs):
     # hashing cost is still n/2 short-input md5s per token (two minhash
@@ -225,26 +274,10 @@ def minhash_lsh_pairs(docs: DataFrame, *, n_minhash: int = 12,
     sides = verify_sides(cand, reps.select(F.col("doc_id").alias("id"),
                                            F.col("toks").alias("v")))
 
-    sa, sb = F.size("v1"), F.size("v2")
-    inter = F.size(F.array_intersect("v1", "v2"))
-    union = sa + sb - inter
-    # The verify threshold as ONE exact integer predicate (no float
-    # division, one intersect per candidate instead of the pushed-down
-    # float filter's two — join/filter conditions get no common-
-    # subexpression elimination):
-    #   round(I/U, 4) >= t  <=>  I/U >= (2m-1)/20000, m = ceil(t*1e4)
-    #   <=>  (20000+2m-1)*I >= (2m-1)*(sa+sb)        [U = sa+sb-I]
-    # preceded by the implied size gate (J <= min/max, so J >= t forces
-    # min*20000 >= (2m-1)*max), an O(1) compare that prunes candidates
-    # before the O(|toks|) intersect ever runs.
-    num = round4_boundary_num(threshold)
-    size_gate = (F.least(sa, sb).cast("long") * 20000
-                 >= F.greatest(sa, sb).cast("long") * num)
-    int_pred = (inter.cast("long") * (20000 + num)
-                >= (sa.cast("long") + sb) * num)
-    pairs = (sides.filter(size_gate & int_pred)
+    pred, jaccard = jaccard_at_least("v1", "v2", threshold)
+    pairs = (sides.filter(pred)
              .select(F.col("id1").alias("doc1"), F.col("id2").alias("doc2"),
-                     F.round(inter / union, 4).alias("jaccard")))
+                     jaccard.alias("jaccard")))
     return pairs, dropped
 
 

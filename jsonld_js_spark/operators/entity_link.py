@@ -1,7 +1,7 @@
-"""Entity linking / canonicalization as DataFrame joins with explicit
-skew handling (north_star: "salted-key entity linking ... broadcast
-join for the entity dictionary, AQE skew join + key salting for hot
-conv_ids / high-degree entities").
+"""Entity linking as DataFrame joins with explicit skew handling
+(north_star: "salted-key entity linking ... broadcast join for the
+entity dictionary, AQE skew join + key salting for hot conv_ids /
+high-degree entities").
 
 Two strategies, same semantics (tests assert equality):
 
@@ -68,22 +68,3 @@ def mention_triples(links: DataFrame) -> DataFrame:
         F.lit(None).cast("string").alias("obj_datatype"),
         F.lit(None).cast("string").alias("obj_lang"))
 
-
-def entity_degrees(links: DataFrame) -> DataFrame:
-    """Degree table (mentions per entity) — feeds the skew planner:
-    entities above a threshold are the ones worth salting."""
-    return (links.groupBy("entity_id", "kind")
-            .agg(F.count(F.lit(1)).alias("degree"),
-                 F.countDistinct("conv_id").alias("n_convs")))
-
-
-def canonicalize_entities(links: DataFrame, aliases: DataFrame) -> DataFrame:
-    """Entity canonicalization: map alias entity_ids onto canonical ids
-    via a broadcast alias table (alias_id -> canonical_id), keeping
-    unaliased ids. This is the identity-resolution step after linking."""
-    return (links.join(F.broadcast(aliases),
-                       links.entity_id == aliases.alias_id, "left")
-            .withColumn("entity_id",
-                        F.coalesce(F.col("canonical_id"), F.col("entity_id")))
-            .drop("alias_id", "canonical_id")
-            .dropDuplicates(["conv_id", "turn_idx", "entity_id"]))

@@ -514,13 +514,14 @@ def materialize_graph_iceberg(triples: DataFrame, table: str, *,
     identical to the parquet twin and is covered by its tests.
     """
     from py4j.protocol import Py4JJavaError
+    from pyspark.sql.functions import partitioning
     from pyspark.sql.utils import AnalysisException
 
     writer = (triples
               .repartition(buckets, F.expr(f"xxhash64(subj) % {buckets}"))
               .sortWithinPartitions("subj", "pred")
               .writeTo(table)
-              .partitionedBy(F.bucket(buckets, F.col("subj")))
+              .partitionedBy(partitioning.bucket(buckets, F.col("subj")))
               .using("iceberg"))
     try:
         if mode == "append":

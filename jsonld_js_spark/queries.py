@@ -315,13 +315,8 @@ def _tordf_customers_raw(spark, sf_dir):
         F.lit('", "nation": {"@id": "https://example.org/kg/nation/'),
         F.col("n_nationkey"),
         F.lit('", "name": "'), F.col("n_name"), F.lit('"}}'))
-    docs = c2.select(
-        F.lit("kg").alias("conv_id"),
-        F.col("c_custkey").cast("int").alias("turn_idx"),
-        F.lit("assistant").alias("role"),
-        doc_text.alias("text"),
-        F.lit(None).cast("string").alias("tool"),
-        F.lit(None).cast("timestamp").alias("ts"))
+    docs = _as_turns(c2, F.lit("kg"), F.col("c_custkey"), doc_text,
+                     F.lit("assistant"))
     tri = triples_only(extract_triples(docs))
     return tri.select("subj", "pred", F.col("obj_value").alias("obj"))
 
@@ -437,7 +432,10 @@ def doc_dedup_token_jaccard(spark, sf_dir):
     """Near-dup detection: token-set Jaccard >= 0.8 within
     (lang, source) blocks. Blocking bounds the pair space (at scale:
     replace blocks with MinHash-LSH buckets, below); the join is a
-    real shuffle join on the block key."""
+    real shuffle join on the block key
+    (operators/dedup.blocked_jaccard_pairs)."""
+    from .operators.dedup import blocked_jaccard_pairs
+
     # spread the one-split scan, then materialize the token array
     # behind a generator: a plain alias would inline the tokenize into
     # the pushed-down size filter (run in the single scan task) and
@@ -446,38 +444,7 @@ def doc_dedup_token_jaccard(spark, sf_dir):
          .select("doc_id", "lang", "source",
                  F.explode(F.array(tokens(F.col("text")))).alias("toks"))
          .filter(F.size("toks") > 0))
-    a = d.alias("a")
-    b = d.alias("b")
-    # sizes are O(1) lookups on the post-shuffle materialized arrays
-    # (a precomputed size COLUMN would collapse into the scan projection
-    # and re-evaluate the whole tokenize expression per row — measured
-    # slower)
-    sa, sb = F.size(F.col("a.toks")), F.size(F.col("b.toks"))
-    inter = F.size(F.array_intersect(F.col("a.toks"), F.col("b.toks")))
-    # |A∪B| = |A|+|B|-|A∩B| (distinct arrays): one O(n) intersect per
-    # pair instead of intersect + a materialized union array
-    union = sa + sb - inter
-    # The threshold as ONE exact integer predicate, ordered LAST in the
-    # join condition so the cheap conjuncts run first (a pushed-down
-    # filter on the rounded float lands FIRST in the condition and
-    # forces the intersect for every block pair — and join conditions
-    # get no common-subexpression elimination, so phrasing union via
-    # the size identity would evaluate the intersect twice):
-    #   round(I/U, 4) >= 0.8  <=>  I/U >= 0.79995 = 15999/20000
-    #   <=> 20000*I >= 15999*(sa+sb-I)  <=>  35999*I >= 15999*(sa+sb)
-    # (integer cross-multiplication; exact — no float division in the
-    # predicate at all; sizes also gate earlier: J <= min/max, so
-    # J >= 0.8 forces 5*min >= 4*max, pruning before the intersect)
-    return (a.join(b, (F.col("a.lang") == F.col("b.lang"))
-                   & (F.col("a.source") == F.col("b.source"))
-                   & (F.col("a.doc_id") < F.col("b.doc_id"))
-                   & (sa * 5 >= sb * 4)
-                   & (sb * 5 >= sa * 4)
-                   & (inter.cast("long") * 35999
-                      >= (sa.cast("long") + sb) * 15999))
-            .select(F.col("a.doc_id").alias("doc1"),
-                    F.col("b.doc_id").alias("doc2"),
-                    F.round(inter / union, 4).alias("jaccard")))
+    return blocked_jaccard_pairs(d, 0.8)
 
 
 ORACLE_DOC_JACCARD = """
@@ -499,7 +466,7 @@ WHERE CAST(len(list_intersect(a.toks, b.toks)) AS DOUBLE)
 
 
 def _shingles3(docs):
-    """(doc_id, lang, source, sh): distinct word-3-gram shingle arrays
+    """(doc_id, lang, source, toks): distinct word-3-gram shingle arrays
     built with pure column algebra (sequence + transform over the
     ordered token array) — JVM-side, no shuffle, no UDF.
 
@@ -519,7 +486,7 @@ def _shingles3(docs):
         lambda i: F.concat_ws("\x1f", F.element_at(F.col("t"), i + 1),
                               F.element_at(F.col("t"), i + 2),
                               F.element_at(F.col("t"), i + 3))))
-    return d.select("doc_id", "lang", "source", sh.alias("sh"))
+    return d.select("doc_id", "lang", "source", sh.alias("toks"))
 
 
 def doc_dedup_ngram_jaccard(spark, sf_dir):
@@ -534,34 +501,10 @@ def doc_dedup_ngram_jaccard(spark, sf_dir):
     corpus scale run the same shingle arrays through
     operators/dedup.minhash_lsh_pairs (shingle -> minhash -> band ->
     bucket join), which bounds the pair space by bucket collisions."""
-    d = _shingles3(load_docs_wide(spark, sf_dir))
-    a = d.alias("a")
-    b = d.alias("b")
-    # sizes are O(1) lookups on the post-shuffle materialized arrays (a
-    # precomputed size COLUMN collapses into the scan projection and
-    # re-evaluates the whole shingle expression per row — measured 1.7x
-    # slower overall)
-    sa, sb = F.size(F.col("a.sh")), F.size(F.col("b.sh"))
-    inter = F.size(F.array_intersect(F.col("a.sh"), F.col("b.sh")))
-    # |A∪B| from sizes (distinct shingle arrays) — no union materialized
-    union = sa + sb - inter
-    # Threshold as ONE exact integer predicate, LAST in the condition
-    # (see doc_dedup_token_jaccard: pushed-down float filters land
-    # first and double-evaluate the intersect per pair):
-    #   round(I/U, 4) >= 0.5  <=>  I/U >= 0.49995 = 9999/20000
-    #   <=> 20000*I >= 9999*(sa+sb-I)  <=>  29999*I >= 9999*(sa+sb)
-    # with the implied size gate (J >= 0.5 forces 2*min >= max) pruning
-    # pairs before the intersect
-    return (a.join(b, (F.col("a.lang") == F.col("b.lang"))
-                   & (F.col("a.source") == F.col("b.source"))
-                   & (F.col("a.doc_id") < F.col("b.doc_id"))
-                   & (sa * 2 >= sb)
-                   & (sb * 2 >= sa)
-                   & (inter.cast("long") * 29999
-                      >= (sa.cast("long") + sb) * 9999))
-            .select(F.col("a.doc_id").alias("doc1"),
-                    F.col("b.doc_id").alias("doc2"),
-                    F.round(inter / union, 4).alias("jaccard")))
+    from .operators.dedup import blocked_jaccard_pairs
+
+    return blocked_jaccard_pairs(_shingles3(load_docs_wide(spark, sf_dir)),
+                                 0.5)
 
 
 ORACLE_DOC_NGRAM_JACCARD = """
@@ -742,7 +685,7 @@ WITH d0 AS (
 def doc_dedup_ngram_minhash(spark, sf_dir):
     """The ORDER-SENSITIVE dedup scale path: word-3-gram shingle sets
     routed through the capped MinHash+LSH candidate generator
-    (operators/dedup.minhash_lsh_pairs with ``toks_col='sh'``) — the
+    (operators/dedup.minhash_lsh_pairs) — the
     production-shape counterpart of the all-pairs
     ``doc_dedup_ngram_jaccard`` demo above. Shingles are built with
     pure column algebra (no shuffle before the LSH bucket join), then
@@ -751,10 +694,10 @@ def doc_dedup_ngram_minhash(spark, sf_dir):
     candidates with true shingle-set Jaccard >= 0.5."""
     from .operators.dedup import minhash_lsh_pairs
 
-    d = _shingles3(load_docs_wide(spark, sf_dir)).select("doc_id", "sh")
+    d = _shingles3(load_docs_wide(spark, sf_dir)).select("doc_id", "toks")
     pairs, _dropped = minhash_lsh_pairs(
         d, n_minhash=_N_MINHASH, n_bands=_N_BANDS, threshold=0.5,
-        max_bucket=_MAX_BUCKET, toks_col="sh")
+        max_bucket=_MAX_BUCKET)
     return pairs
 
 
@@ -954,21 +897,17 @@ FROM g GROUP BY doc_id
 
 def emb_pair_cosine(spark, sf_dir):
     """Vector similarity as pure column algebra: cosine(vec_0, vec_k)
-    for k in 1..20 — F.zip_with + F.aggregate, no UDF."""
-    e = load(spark, sf_dir, "embeddings")
-    e = e.withColumn("embedding", F.col("embedding").cast("array<double>"))
+    for k in 1..20 — F.zip_with + F.aggregate (simsearch._cosine), no
+    UDF."""
+    from .operators.simsearch import _as_double, _cosine
+
+    e = _as_double(load(spark, sf_dir, "embeddings"), "embedding")
     q = e.filter(F.col("vec_id") == 0).select(
         F.col("embedding").alias("qv"))
     t = e.filter((F.col("vec_id") >= 1) & (F.col("vec_id") <= 20))
-    joined = t.crossJoin(F.broadcast(q))
-    dot = F.aggregate(F.zip_with("embedding", "qv", lambda a, b: a * b),
-                      F.lit(0.0), lambda acc, x: acc + x)
-    na = F.sqrt(F.aggregate(F.transform("embedding", lambda a: a * a),
-                            F.lit(0.0), lambda acc, x: acc + x))
-    nb = F.sqrt(F.aggregate(F.transform("qv", lambda a: a * a),
-                            F.lit(0.0), lambda acc, x: acc + x))
-    return joined.select("vec_id",
-                         F.round(dot / (na * nb), 6).alias("cosine"))
+    return (t.crossJoin(F.broadcast(q))
+            .select("vec_id",
+                    F.round(_cosine("embedding", "qv"), 6).alias("cosine")))
 
 
 ORACLE_EMB_PAIR = """
@@ -1544,6 +1483,27 @@ SELECT vec_id, cell FROM a2
 """
 
 
+def _as_turns(df: DataFrame, conv_id, turn_idx, text, role) -> DataFrame:
+    """The transcript row shape (conv_id, turn_idx, role, text, tool,
+    ts) the extractors read, built from ``df`` with no tool and no ts —
+    shared by every query that derives turns from a base table."""
+    return df.select(conv_id.alias("conv_id"),
+                     turn_idx.cast("int").alias("turn_idx"),
+                     role.alias("role"),
+                     text.alias("text"),
+                     F.lit(None).cast("string").alias("tool"),
+                     F.lit(None).cast("timestamp").alias("ts"))
+
+
+def _knows_doc(doc_id):
+    """Embedded JSON-LD doc with ONE blank node: doc/<id> knows a node
+    named K<id> — RDFC-1.0 labels that node c14n0."""
+    return F.concat(
+        F.lit('{"@context":{"@vocab":"https://example.org/vocab#"},'
+              '"@id":"https://example.org/doc/'),
+        doc_id, F.lit('","knows":{"name":"K'), doc_id, F.lit('"}}'))
+
+
 def _docs_as_transcripts(spark, sf_dir):
     """documents -> transcript-shaped rows both engines can derive:
     conv 'doc-<id>', turn doc_id % 5, role by doc_id % 3, the document
@@ -1552,16 +1512,12 @@ def _docs_as_transcripts(spark, sf_dir):
     (the filter is replicated verbatim in the oracle)."""
     d = load_docs_wide(spark, sf_dir)
     lead = F.substring(F.ltrim(F.col("text")), 1, 1)
-    return (d.filter(~lead.isin("{", "["))
-            .select(F.concat(F.lit("doc-"), F.col("doc_id")).alias("conv_id"),
-                    (F.col("doc_id") % 5).cast("int").alias("turn_idx"),
-                    F.element_at(F.array(F.lit("user"), F.lit("assistant"),
-                                         F.lit("tool")),
-                                 (F.col("doc_id") % 3 + 1).cast("int"))
-                    .alias("role"),
-                    F.col("text"),
-                    F.lit(None).cast("string").alias("tool"),
-                    F.lit(None).cast("timestamp").alias("ts")))
+    role = F.element_at(F.array(F.lit("user"), F.lit("assistant"),
+                                F.lit("tool")),
+                        (F.col("doc_id") % 3 + 1).cast("int"))
+    return _as_turns(d.filter(~lead.isin("{", "[")),
+                     F.concat(F.lit("doc-"), F.col("doc_id")),
+                     F.col("doc_id") % 5, F.col("text"), role)
 
 
 def kg_extract_documents(spark, sf_dir):
@@ -1633,19 +1589,10 @@ def kg_canonize_documents(spark, sf_dir):
 
     # spread the single-split scan before the per-document canonize
     # kernel (test-data plumbing, see _spread)
-    d = load_docs_wide(spark, sf_dir)
-    doc_text = F.concat(
-        F.lit('{"@context":{"@vocab":"https://example.org/vocab#"},'
-              '"@id":"https://example.org/doc/'),
-        F.col("doc_id"),
-        F.lit('","knows":{"name":"K'), F.col("doc_id"), F.lit('"}}'))
-    tx = d.select(
-        F.concat(F.lit("doc-"), F.col("doc_id")).alias("conv_id"),
-        (F.col("doc_id") % 5).cast("int").alias("turn_idx"),
-        F.lit("assistant").alias("role"),
-        doc_text.alias("text"),
-        F.lit(None).cast("string").alias("tool"),
-        F.lit(None).cast("timestamp").alias("ts"))
+    tx = _as_turns(load_docs_wide(spark, sf_dir),
+                   F.concat(F.lit("doc-"), F.col("doc_id")),
+                   F.col("doc_id") % 5, _knows_doc(F.col("doc_id")),
+                   F.lit("assistant"))
     return (triples_only(extract_triples(tx, canonicalize=True))
             .select("conv_id", "turn_idx", "subj", "pred", "obj_kind",
                     "obj_value", "obj_datatype"))
@@ -1693,22 +1640,13 @@ def kg_canonize_poison(spark, sf_dir):
     row-count oracle pins both sides exactly."""
     from .operators.pipeline import extract_triples
 
-    # spread before the canonize kernel (test-data plumbing, _spread)
-    d = load_docs_wide(spark, sf_dir)
-    clean_text = F.concat(
-        F.lit('{"@context":{"@vocab":"https://example.org/vocab#"},'
-              '"@id":"https://example.org/doc/'),
-        F.col("doc_id"),
-        F.lit('","knows":{"name":"K'), F.col("doc_id"), F.lit('"}}'))
     is_poison = F.col("doc_id") % 41 == 0
-    tx = d.select(
-        F.concat(F.lit("pz-"), F.col("doc_id")).alias("conv_id"),
-        F.lit(0).cast("int").alias("turn_idx"),
-        F.lit("assistant").alias("role"),
-        F.when(is_poison, F.lit(_K6_POISON_DOC))
-        .otherwise(clean_text).alias("text"),
-        F.lit(None).cast("string").alias("tool"),
-        F.lit(None).cast("timestamp").alias("ts"))
+    text = (F.when(is_poison, F.lit(_K6_POISON_DOC))
+            .otherwise(_knows_doc(F.col("doc_id"))))
+    # spread before the canonize kernel (test-data plumbing, _spread)
+    tx = _as_turns(load_docs_wide(spark, sf_dir),
+                   F.concat(F.lit("pz-"), F.col("doc_id")), F.lit(0), text,
+                   F.lit("assistant"))
     ex = extract_triples(tx, canonicalize=True)
     poison_warning = ((F.col("kind") == "warning")
                       & (F.col("obj_value")
@@ -1742,27 +1680,18 @@ def kg_extract_poison_depth(spark, sf_dir):
     job after 4 retries. Row-count oracle pins both sides."""
     from .operators.pipeline import extract_triples
 
-    # spread BEFORE building the 250 KB deep_text strings so both the
-    # string build and the kernel parallelize (test-data plumbing)
-    d = load_docs_wide(spark, sf_dir)
-    clean_text = F.concat(
-        F.lit('{"@context":{"@vocab":"https://example.org/vocab#"},'
-              '"@id":"https://example.org/doc/'),
-        F.col("doc_id"),
-        F.lit('","knows":{"name":"K'), F.col("doc_id"), F.lit('"}}'))
     deep_text = F.concat(
         F.lit('{"@context":{"n":"https://example.org/vocab#n"},'),
         F.repeat(F.lit('"n":{'), 50000),
         F.lit('"@id":"https://example.org/deep"'),
         F.repeat(F.lit('}'), 50000), F.lit('}'))
     is_poison = F.col("doc_id") % 53 == 0
-    tx = d.select(
-        F.concat(F.lit("dp-"), F.col("doc_id")).alias("conv_id"),
-        F.lit(0).cast("int").alias("turn_idx"),
-        F.lit("assistant").alias("role"),
-        F.when(is_poison, deep_text).otherwise(clean_text).alias("text"),
-        F.lit(None).cast("string").alias("tool"),
-        F.lit(None).cast("timestamp").alias("ts"))
+    text = F.when(is_poison, deep_text).otherwise(_knows_doc(F.col("doc_id")))
+    # spread BEFORE building the 250 KB deep_text strings so both the
+    # string build and the kernel parallelize (test-data plumbing)
+    tx = _as_turns(load_docs_wide(spark, sf_dir),
+                   F.concat(F.lit("dp-"), F.col("doc_id")), F.lit(0), text,
+                   F.lit("assistant"))
     ex = extract_triples(tx)
     return (ex.groupBy("conv_id")
             .agg(F.sum(F.when(F.col("kind") == "triple", 1).otherwise(0))

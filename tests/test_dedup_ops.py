@@ -209,10 +209,9 @@ def test_ngram_scale_path_recall_on_planted_corpus(spark):
 
     sdf = spark.createDataFrame(
         [(d, sorted(shingles[d])) for d in ids],
-        "doc_id long, sh array<string>")
+        "doc_id long, toks array<string>")
     pairs, _ = minhash_lsh_pairs(sdf, n_minhash=12, n_bands=3,
-                                 threshold=0.5, max_bucket=20,
-                                 toks_col="sh")
+                                 threshold=0.5, max_bucket=20)
     got = {(r["doc1"], r["doc2"]): r["jaccard"] for r in pairs.collect()}
 
     # precision is 1.0 by construction (the operator verifies with

@@ -172,8 +172,8 @@ def test_ngram_demo_pairs_contained_in_minhash_scale_path(spark):
              for r in doc_dedup_ngram_minhash(spark, SF_DIR).collect()}
 
     # exact-shape rep map, computed exactly like minhash_lsh_pairs
-    sh = _shingles3(load(spark, SF_DIR, "documents")).select("doc_id", "sh")
-    shape = F.md5(F.concat_ws("\x1f", F.array_sort("sh"))).alias("shape")
+    sh = _shingles3(load(spark, SF_DIR, "documents")).select("doc_id", "toks")
+    shape = F.md5(F.concat_ws("\x1f", F.array_sort("toks"))).alias("shape")
     rep = {r["doc_id"]: r["rep"]
            for r in sh.select("doc_id", shape)
            .withColumn("rep", F.min("doc_id").over(Window.partitionBy("shape")))

@@ -5,7 +5,8 @@ Each test pins an equivalence the r6 rewrites rely on:
     replaced (bit-for-bit, vs an independent pure-Python reference);
   - shape collapse keeps the MIN doc_id and THAT row's token array;
   - the reps subtree really is window-free (plan shape);
-  - the integer verify predicates are exactly round(I/U,4) >= t;
+  - the integer verify predicate and its size gate are exactly
+    round(I/U,4) >= t, also at subset pairs beyond the corpus sizes;
   - frontier label propagation converges on a deep chain;
   - release=False leaves caller-registered caches alive.
 """
@@ -19,8 +20,8 @@ from pyspark.sql import functions as F
 
 from jsonld_js_spark.operators import cachereg
 from jsonld_js_spark.operators.dedup import (
-    collapse_exact_shapes, dedup_components, minhash_band_structs,
-    minhash_lsh_pairs, round4_boundary_num)
+    collapse_exact_shapes, dedup_components, jaccard_at_least,
+    minhash_band_structs, minhash_lsh_pairs, round4_boundary_num)
 
 DOCS = [
     (1, ["alpha", "beta", "gamma"]),
@@ -98,6 +99,33 @@ def test_integer_verify_predicate_equals_rounded_threshold(threshold):
                 want = round(inter / union, 4) >= threshold
                 got = inter * (20000 + num) >= (sa + sb) * num
                 assert got == want, (threshold, sa, sb, inter)
+            # the size gate prunes exactly the size pairs no
+            # intersection could lift to the threshold
+            gate = min(sa, sb) * 20000 >= max(sa, sb) * num
+            reachable = any(inter * (20000 + num) >= (sa + sb) * num
+                            for inter in range(0, min(sa, sb) + 1))
+            assert gate == reachable, (threshold, sa, sb)
+
+
+def test_jaccard_at_least_matches_spark_rounding(spark):
+    # subset pairs that round onto the threshold (J = 0.799950...,
+    # 0.499950...): a gate stricter than the implied one, such as
+    # 5*min >= 4*max at 0.8, would drop them
+    for threshold, small, big, want in [(0.8, 3203, 4004, True),
+                                        (0.8, 3202, 4004, False),
+                                        (0.5, 5000, 10001, True)]:
+        a = [str(i) for i in range(small)]
+        b = [str(i) for i in range(big)]
+        df = spark.createDataFrame([(a, b), (b, a)],
+                                   "v1 array<string>, v2 array<string>")
+        pred, jaccard = jaccard_at_least("v1", "v2", threshold)
+        inter = F.size(F.array_intersect("v1", "v2"))
+        rounded = F.round(inter / (F.size("v1") + F.size("v2") - inter), 4)
+        for r in df.select(pred.alias("p"),
+                           (rounded >= threshold).alias("ref"),
+                           jaccard.alias("j"), rounded.alias("jr")).collect():
+            assert r.p == r.ref == want, (threshold, small, big)
+            assert r.j == r.jr
 
 
 def test_components_chain_converges_to_min(spark):

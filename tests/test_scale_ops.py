@@ -7,8 +7,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from jsonld_js_spark.operators.entity_link import (
-    canonicalize_entities,
-    entity_degrees,
     link_entities,
     mention_triples,
 )
@@ -40,10 +38,9 @@ def entities(spark):
 def test_entity_linking_finds_hot_surfaces(spark, transcripts, entities):
     links = link_entities(transcripts, entities).cache()
     assert links.count() > 0
-    degrees = entity_degrees(links)
-    hot = degrees.orderBy(F.col("degree").desc()).limit(5).collect()
+    hot = links.groupBy("entity_id").count().orderBy(F.desc("count")).first()
     # 'spark'/'graph' style surfaces appear in most utterances
-    assert hot[0]["degree"] > 50
+    assert hot["count"] > 50
 
 
 def test_salted_join_equals_broadcast(spark, transcripts, entities):
@@ -60,22 +57,6 @@ def test_mention_triples_schema(spark, transcripts, entities):
     row = tri.first()
     assert row["pred"].endswith("#mentions")
     assert row["obj_value"].startswith("https://example.org/ent/")
-
-
-def test_entity_canonicalization(spark, transcripts, entities):
-    links = link_entities(transcripts, entities)
-    aliases = spark.createDataFrame(
-        [("https://example.org/ent/0", "https://example.org/ent/1")],
-        "alias_id string, canonical_id string")
-    canon = canonicalize_entities(links, aliases)
-    assert canon.filter(F.col("entity_id") == "https://example.org/ent/0").count() == 0
-    # rows for ent/0 moved onto ent/1, deduped per turn
-    before = links.filter(F.col("entity_id").isin(
-        "https://example.org/ent/0", "https://example.org/ent/1")) \
-        .select("conv_id", "turn_idx").distinct().count()
-    after = canon.filter(F.col("entity_id") == "https://example.org/ent/1") \
-        .select("conv_id", "turn_idx").distinct().count()
-    assert after == before
 
 
 def test_resume_after_kill_is_byte_identical(spark, transcripts, tmp_path):
