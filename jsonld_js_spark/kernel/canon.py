@@ -226,7 +226,14 @@ class _Canonicalizer:
 
 def canonical_id_map(quads: list[dict], max_work_factor: float | int = 3,
                      message_digest_algorithm: str = "sha256") -> dict[str, str]:
-    """old blank-node label -> canonical label (`c14nN`, no `_:`)."""
+    """old blank-node label -> canonical label (`c14nN`, no `_:`).
+
+    A dataset without blank nodes issues no labels, so it returns ``{}``
+    without hashing anything; the digest is still resolved first, so an
+    unknown algorithm raises on every input."""
+    _make_digest(message_digest_algorithm)
+    if not any(True for q in quads for _ in _quad_bnodes(q)):
+        return {}
     return _Canonicalizer(quads, max_work_factor,
                           message_digest_algorithm).run()
 

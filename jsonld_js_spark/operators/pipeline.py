@@ -194,8 +194,9 @@ def turn_to_quads(conv_id: str, turn_idx: int, role: str, text: str,
                                "level": "warning", "message": str(e)})
                 return [], events
             # namespace canonical labels per document (SURVEY §2.9)
-            quads = relabel_quads(
-                quads, {old: f"c14n-{salt}-{new[4:]}" for old, new in id_map.items()})
+            if id_map:
+                quads = relabel_quads(quads, {
+                    old: f"c14n-{salt}-{new[4:]}" for old, new in id_map.items()})
     except JsonLdError as e:
         events.append({"code": e.code or e.name, "level": "error",
                        "message": e.message})
@@ -236,14 +237,14 @@ def extract_triples(transcripts: DataFrame, *, canonicalize: bool = False,
     """
     import pandas as pd
 
-    spark = transcripts.sparkSession
-    bc = spark.sparkContext.broadcast(dict(options or {}))
-
+    # captured in the closure, not broadcast per call: PySpark already
+    # ships a pickled command over its broadcast threshold (1 MB) as a
+    # broadcast, so a large context_loader still travels once
+    opts = dict(options or {})
     cols = ("conv_id", "turn_idx", "kind", "graph", "subj", "pred",
             "obj_kind", "obj_value", "obj_datatype", "obj_lang")
 
     def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        opts = bc.value
         for pdf in batches:
             # column-wise accumulation: building pandas from 10 flat
             # lists is ~5x cheaper than from a list of row tuples, and
@@ -362,56 +363,70 @@ def _needs_kernel_col():
                & (F.length("text") > _JK_MAX_STRING)))
 
 
+def _envelope_row(pred: str, kind: str, value: str, dt: str | None) -> str:
+    """SQL of one exploded (pred, obj_kind, obj_value, obj_datatype)
+    struct; `value` is a SQL expression over the per-turn projection."""
+    dt_sql = f"'{dt}'" if dt else "CAST(NULL AS STRING)"
+    return (f"named_struct('pred', '{pred}', 'obj_kind', '{kind}', "
+            f"'obj_value', {value}, 'obj_datatype', {dt_sql})")
+
+
+# The envelope rows of one turn; a NULL element (absent role, ts or
+# fast-path tool) is dropped after the explode. Routing guarantees any
+# tool payload reaching the JVM branch passes the fast-path gate; the
+# `tool_ok` guard keeps the operator safe standalone.
+_ENVELOPE_ROWS = "array({})".format(", ".join((
+    _envelope_row(_RDF_TYPE, "iri", f"'{V}Turn'", None),
+    _envelope_row(V + "conversation", "iri", "conv_iri", None),
+    "IF(role IS NULL, NULL, {})".format(
+        _envelope_row(V + "role", "literal", "role", _XSD + "string")),
+    _envelope_row(V + "text", "literal", "text", _XSD + "string"),
+    _envelope_row(V + "turnIndex", "literal", "turn_s", _XSD + "integer"),
+    "IF(ts_iso IS NULL, NULL, {})".format(
+        _envelope_row(V + "ts", "literal", "ts_iso", _XSD + "dateTime")),
+    "IF(tool_ok, {}, NULL)".format(
+        _envelope_row(V + "invokes", "iri", "tool_iri", None)),
+    "IF(tool_ok, {}, NULL)".format(
+        _envelope_row(V + "toolArgs", "literal", "tool_jcs", _RDF_JSON)),
+)))
+
+
 def _envelope_triples_jvm(plain: DataFrame) -> DataFrame:
     """Envelope triples for plain turns as pure column algebra — stays
     inside whole-stage codegen, no Python worker at all. Byte-parity
-    with the kernel path is asserted in tests/test_pipeline.py."""
-    subj = F.concat(F.lit("https://example.org/conv/"), F.col("conv_id"),
-                    F.lit("/turn/"), F.col("turn_idx"))
-    conv_iri = F.concat(F.lit("https://example.org/conv/"), F.col("conv_id"))
+    with the kernel path is asserted in tests/test_pipeline.py.
+
+    Every per-turn value (subject, conversation IRI, timestamp, tool
+    gate, name and JCS) is computed once in the projection below the
+    explode: Generate gets no common-subexpression elimination, so an
+    expression inside the exploded array runs once per element. The
+    structs carry only the four per-row fields; the constant `graph`
+    and `obj_lang` and the shared subject are added after the explode."""
     # python isoformat(): fractional part only when non-zero micros
     ts_short = F.date_format("ts", "yyyy-MM-dd'T'HH:mm:ss")
     ts_micro = F.date_format("ts", "SSSSSS")
-    ts_iso = F.when(ts_micro == "000000", ts_short).otherwise(
-        F.concat(ts_short, F.lit("."), ts_micro))
-    null_s = F.lit(None).cast("string")
-
-    def t(pred, kind, value, dt):
-        return F.struct(
-            F.lit("").alias("graph"),
-            subj.alias("subj"),
-            F.lit(pred).alias("pred"),
-            F.lit(kind).alias("obj_kind"),
-            value.alias("obj_value"),
-            (F.lit(dt) if dt else null_s).alias("obj_datatype"),
-            null_s.alias("obj_lang"))
-
     tool_simple, tool_name, tool_jcs = _tool_fast_cols()
-    tool_ok = F.col("tool").isNotNull() & tool_simple
-    rows = F.array(
-        t(_RDF_TYPE, "iri", F.lit(V + "Turn"), None),
-        t(V + "conversation", "iri", conv_iri, None),
-        F.when(F.col("role").isNotNull(),
-               t(V + "role", "literal", F.col("role"), _XSD + "string")),
-        t(V + "text", "literal", F.coalesce(F.col("text"), F.lit("")),
-          _XSD + "string"),
-        t(V + "turnIndex", "literal", F.col("turn_idx").cast("string"),
-          _XSD + "integer"),
-        F.when(F.col("ts").isNotNull(),
-               t(V + "ts", "literal", ts_iso, _XSD + "dateTime")),
-        # the tool fast path (routing guarantees any tool payload that
-        # reaches this branch passes the fast-path gate; the guard is
-        # kept so the operator is safe standalone)
-        F.when(tool_ok,
-               t(V + "invokes", "iri",
-                 F.concat(F.lit("https://example.org/tool/"), tool_name),
-                 None)),
-        F.when(tool_ok, t(V + "toolArgs", "literal", tool_jcs, _RDF_JSON)),
-    )
-    return (plain.select("conv_id", "turn_idx", F.explode(rows).alias("r"))
+    per_turn = plain.select(
+        "conv_id", "turn_idx", "role",
+        F.concat(F.lit("https://example.org/conv/"), "conv_id", F.lit("/turn/"),
+                 "turn_idx").alias("subj"),
+        F.concat(F.lit("https://example.org/conv/"), "conv_id")
+        .alias("conv_iri"),
+        F.col("turn_idx").cast("string").alias("turn_s"),
+        F.coalesce("text", F.lit("")).alias("text"),
+        F.when(ts_micro == "000000", ts_short)
+        .otherwise(F.concat(ts_short, F.lit("."), ts_micro)).alias("ts_iso"),
+        (F.col("tool").isNotNull() & tool_simple).alias("tool_ok"),
+        F.concat(F.lit("https://example.org/tool/"), tool_name)
+        .alias("tool_iri"),
+        tool_jcs.alias("tool_jcs"))
+    return (per_turn
+            .select("conv_id", "turn_idx", "subj",
+                    F.explode(F.expr(_ENVELOPE_ROWS)).alias("r"))
             .filter(F.col("r").isNotNull())
             .select("conv_id", "turn_idx", F.lit("triple").alias("kind"),
-                    "r.*"))
+                    F.lit("").alias("graph"), "subj", "r.*",
+                    F.lit(None).cast("string").alias("obj_lang")))
 
 
 def extract_triples_hybrid(transcripts: DataFrame, *,

@@ -454,14 +454,14 @@ WITH d AS (
              AS toks
   FROM documents
   WHERE len(list_filter(string_split(text, ' '), x -> x <> '')) > 0)
-SELECT a.doc_id AS doc1, b.doc_id AS doc2,
-       ROUND(CAST(len(list_intersect(a.toks, b.toks)) AS DOUBLE)
-             / (len(a.toks) + len(b.toks) - len(list_intersect(a.toks, b.toks))),
-             4) AS jaccard
-FROM d a JOIN d b
-  ON a.lang = b.lang AND a.source = b.source AND a.doc_id < b.doc_id
-WHERE CAST(len(list_intersect(a.toks, b.toks)) AS DOUBLE)
-      / (len(a.toks) + len(b.toks) - len(list_intersect(a.toks, b.toks))) >= 0.8
+SELECT doc1, doc2, jaccard FROM (
+  SELECT a.doc_id AS doc1, b.doc_id AS doc2,
+         ROUND(CAST(len(list_intersect(a.toks, b.toks)) AS DOUBLE)
+               / (len(a.toks) + len(b.toks)
+                  - len(list_intersect(a.toks, b.toks))), 4) AS jaccard
+  FROM d a JOIN d b
+    ON a.lang = b.lang AND a.source = b.source AND a.doc_id < b.doc_id)
+WHERE jaccard >= 0.8
 """
 
 
@@ -550,6 +550,18 @@ def doc_dedup_minhash_lsh(spark, sf_dir):
                              threshold=0.5)[0]
 
 
+# the LSH oracles' true-Jaccard verify of their candidate pairs: like
+# every Spark leaf (operators/dedup.jaccard_at_least), it keeps a pair
+# on the Jaccard rounded to 4 places
+_ORACLE_VERIFY = """SELECT doc1, doc2, jaccard FROM (
+  SELECT doc1, doc2,
+         ROUND(CAST(len(list_intersect(d1.toks, d2.toks)) AS DOUBLE)
+               / (len(d1.toks) + len(d2.toks)
+                  - len(list_intersect(d1.toks, d2.toks))), 4) AS jaccard
+  FROM cand JOIN d d1 ON d1.doc_id = doc1 JOIN d d2 ON d2.doc_id = doc2)
+WHERE jaccard >= 0.5
+"""
+
 ORACLE_DOC_MINHASH = f'''
 WITH d0 AS (
   SELECT doc_id,
@@ -588,15 +600,7 @@ cand AS (
   SELECT DISTINCT a.doc_id AS doc1, b.doc_id AS doc2
   FROM buckets a JOIN buckets b
     ON a.band = b.band AND a.sig = b.sig AND a.doc_id < b.doc_id)
-SELECT doc1, doc2,
-       ROUND(CAST(len(list_intersect(d1.toks, d2.toks)) AS DOUBLE)
-             / (len(d1.toks) + len(d2.toks)
-                - len(list_intersect(d1.toks, d2.toks))), 4) AS jaccard
-FROM cand JOIN d d1 ON d1.doc_id = doc1 JOIN d d2 ON d2.doc_id = doc2
-WHERE CAST(len(list_intersect(d1.toks, d2.toks)) AS DOUBLE)
-      / (len(d1.toks) + len(d2.toks) - len(list_intersect(d1.toks, d2.toks)))
-      >= 0.5
-'''
+{_ORACLE_VERIFY}'''
 
 
 _MAX_BUCKET = 20
@@ -662,15 +666,7 @@ cand AS (
     UNION ALL
     SELECT bmin AS doc1, doc_id AS doc2
     FROM sized WHERE bsize > {_MAX_BUCKET} AND doc_id <> bmin))
-SELECT doc1, doc2,
-       ROUND(CAST(len(list_intersect(d1.toks, d2.toks)) AS DOUBLE)
-             / (len(d1.toks) + len(d2.toks)
-                - len(list_intersect(d1.toks, d2.toks))), 4) AS jaccard
-FROM cand JOIN d d1 ON d1.doc_id = doc1 JOIN d d2 ON d2.doc_id = doc2
-WHERE CAST(len(list_intersect(d1.toks, d2.toks)) AS DOUBLE)
-      / (len(d1.toks) + len(d2.toks) - len(list_intersect(d1.toks, d2.toks)))
-      >= 0.5
-'''
+{_ORACLE_VERIFY}'''
 
 ORACLE_DOC_MINHASH_CAPPED = f'''
 WITH d0 AS (

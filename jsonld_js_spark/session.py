@@ -4,6 +4,16 @@ Scale posture (SURVEY §4): AQE on (skew-join splitting + partition
 coalescing), Arrow batches pinned so per-document UDF memory is
 bounded, shuffle partitions sized to cores locally (cluster deploys
 override via spark-submit conf).
+
+PySpark's DataFrame debugging (``spark.python.sql.dataFrameDebugging.enabled``,
+on by default in Spark 4) is switched off: with it, every
+``pyspark.sql.functions`` call captures its Python call site (a stack
+walk and several py4j round trips), about 1 ms per Column, which made
+building the hybrid extraction plan a sizeable share of a pass. The
+cost of the default: an analysis error no longer names the Python line
+that built the failing expression. Pass
+``extra_conf={"spark.python.sql.dataFrameDebugging.enabled": "true"}``
+to get the call sites back while debugging.
 """
 
 from __future__ import annotations
@@ -32,6 +42,7 @@ def build_session(app_name: str = "jsonld_js_spark", *, cores: int | None = None
         .config("spark.sql.files.maxPartitionBytes", "134217728")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -1,7 +1,7 @@
 """Interleaved A/B of a git ref (the parent) against the checkout (the change).
 
     python3 scripts/ab.py <ref> [--workload W]... [--query Q]...
-                          [--pairs 10] [--seed 1]
+                          [--pairs 10] [--seed 1] [--trace 1]
 
 Workload mode, the default (every workload of BENCHMARK.json): each side
 runs BENCHMARK.json's command from its own tree, `--workload W --seed S
@@ -25,6 +25,11 @@ wins, failed/attempted operations per side and a verdict:
 - unresolved: the parent's IQR is wider than the bound and not every
   change run is better than every parent run
 - no regression: otherwise
+
+With --trace 1, after its pairs each workload runs one traced pair
+(`--trace 1`, parent first) and prints the parent's and the change's
+value of every per-layer metric of BENCHMARK.json, with no verdict: one
+traced run per side shows which layer moved, it does not judge it.
 """
 
 from __future__ import annotations
@@ -70,6 +75,25 @@ def verdict(parent: list, change: list, better: str, bound: float,
     else:
         row["verdict"] = "no regression"
     return row
+
+
+def trace_rows(name: str, parent: dict | None, change: dict | None,
+               per_layer: list) -> list:
+    """The lines of one traced pair: each per-layer metric with the
+    parent's and the change's value ('-' where a run has none)."""
+    def shown(res, metric):
+        m = (res or {}).get("metrics", {}).get(metric)
+        return "-" if m is None else f"{m['value']:.4g}"
+
+    def state(res):
+        return ("FAILED" if res is None else
+                f"correct={res['correct']} failed {res['failed']}/"
+                f"{res['attempted']}")
+
+    return ([f"trace {name}: parent {state(parent)}; change {state(change)}"]
+            + [f"{name:24} {m['name']:34} {shown(parent, m['name']):>12} "
+               f"{shown(change, m['name']):>12} {m['unit']}"
+               for m in per_layer])
 
 
 def time_query(query: str) -> None:
@@ -155,6 +179,8 @@ def main(argv=None) -> int:
     ap.add_argument("--query", action="append", default=[])
     ap.add_argument("--pairs", type=int, default=10)
     ap.add_argument("--seed", type=int, default=1)
+    ap.add_argument("--trace", type=int, choices=(0, 1), default=0,
+                    help="1: one traced pair per workload after its pairs")
     args = ap.parse_args(argv)
     with open(os.path.join(REPO, "BENCHMARK.json")) as f:
         bench = json.load(f)
@@ -168,13 +194,22 @@ def main(argv=None) -> int:
         subprocess.run(["git", *a], cwd=REPO, check=check,
                        capture_output=True)
 
+    def run_cmd(w, trace):
+        return [*bench["command"], "--workload", w, "--seed", str(args.seed),
+                "--seconds", str(bench["run_seconds"]), "--trace", str(trace)]
+
     git("worktree", "remove", "--force", WORKTREE, check=False)
     git("worktree", "add", "--detach", WORKTREE, args.ref)
+    traced = []
     try:
-        rows = [row for w in workloads for row in ab(
-            w, [*bench["command"], "--workload", w, "--seed", str(args.seed),
-                "--seconds", str(bench["run_seconds"]), "--trace", "0"],
-            None, bench["end_to_end"], args.pairs)]
+        rows = []
+        for w in workloads:
+            rows += ab(w, run_cmd(w, 0), None, bench["end_to_end"],
+                       args.pairs)
+            if args.trace:
+                traced += trace_rows(
+                    w, run_side(WORKTREE, run_cmd(w, 1), None),
+                    run_side(REPO, run_cmd(w, 1), None), bench["per_layer"])
         worker = "import sys, ab; ab.time_query(sys.argv[1])"
         rows += [row for q in args.query for row in ab(
             q, [sys.executable, "-c", worker, q], query_env, wall,
@@ -190,6 +225,10 @@ def main(argv=None) -> int:
               f"{r['change']:10.4g} {r['iqr']:10.4g} "
               f"{r['wins']:>3}/{r['pairs']:<2} {f'{pf}/{pa}':>9} "
               f"{f'{cf}/{ca}':>9}  {r['verdict']}")
+    if traced:
+        print(f"\n{'workload':24} {'per-layer metric':34} {'parent':>12} "
+              f"{'change':>12} unit")
+        print("\n".join(traced))
     return 0
 
 

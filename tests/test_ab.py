@@ -1,4 +1,4 @@
-"""Verdict rule of scripts/ab.py on synthetic paired samples (no Spark)."""
+"""Verdict rule and traced-pair rows of scripts/ab.py (no Spark)."""
 
 import os
 import sys
@@ -7,7 +7,7 @@ import pytest
 
 sys.path.insert(0, os.path.join(os.path.dirname(os.path.dirname(
     os.path.abspath(__file__))), "scripts"))
-from ab import verdict  # noqa: E402
+from ab import trace_rows, verdict  # noqa: E402
 
 BOUND = 0.25
 # parent runs around 10 with an IQR of about 0.5 (5% of the median)
@@ -78,3 +78,32 @@ def test_no_valid_change_run_is_a_regression():
     row = verdict(PARENT, [None] * 10, "lower", BOUND)
     assert row["wins"] == 0
     assert row["verdict"] == "regression"
+
+
+def test_trace_rows_show_both_sides_of_every_layer_metric():
+    per_layer = [{"name": "pipeline.jvm_branch_s", "unit": "s"},
+                 {"name": "plan.generate", "unit": "count"},
+                 {"name": "kernel.canon_us", "unit": "us"}]
+    parent = {"correct": True, "attempted": 4, "failed": 0, "metrics": {
+        "pipeline.jvm_branch_s": {"value": 1.58, "unit": "s"},
+        "plan.generate": {"value": 1, "unit": "count"}}}
+    change = {"correct": True, "attempted": 4, "failed": 0, "metrics": {
+        "pipeline.jvm_branch_s": {"value": 1.123456, "unit": "s"},
+        "plan.generate": {"value": 1, "unit": "count"}}}
+    head, *rows = trace_rows("hybrid_extract", parent, change, per_layer)
+    assert head == ("trace hybrid_extract: parent correct=True failed 0/4; "
+                    "change correct=True failed 0/4")
+    assert [r.split() for r in rows] == [
+        ["hybrid_extract", "pipeline.jvm_branch_s", "1.58", "1.123", "s"],
+        ["hybrid_extract", "plan.generate", "1", "1", "count"],
+        ["hybrid_extract", "kernel.canon_us", "-", "-", "us"]]
+    assert not any("gain" in r or "regression" in r for r in rows)
+
+
+def test_trace_rows_of_a_failed_side():
+    per_layer = [{"name": "pipeline.jvm_branch_s", "unit": "s"}]
+    head, row = trace_rows("w", None, {"correct": False, "attempted": 4,
+                                       "failed": 1, "metrics": {}},
+                           per_layer)
+    assert head == "trace w: parent FAILED; change correct=False failed 1/4"
+    assert row.split() == ["w", "pipeline.jvm_branch_s", "-", "-", "s"]

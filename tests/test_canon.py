@@ -269,6 +269,20 @@ def test_message_digest_algorithm_rejected():
         canon_nq(f'_:x <{EX}p> "v" .\n', message_digest_algorithm="md5sum")
 
 
+def test_bnode_free_dataset_issues_no_labels():
+    nq = (f'<{EX}s> <{EX}p> "v" .\n'
+          f'<{EX}s> <{EX}q> <{EX}o> <{EX}g> .\n')
+    assert canonical_id_map(parse(nq)) == {}
+    assert canon_nq(nq) == "".join(sorted(nq.splitlines(keepends=True)))
+
+
+def test_unknown_digest_rejected_without_bnodes():
+    """The no-blank-node shortcut must not hide a bad option."""
+    with pytest.raises(ValueError, match="messageDigestAlgorithm"):
+        canonical_id_map(parse(f'<{EX}s> <{EX}p> "v" .\n'),
+                         message_digest_algorithm="md4")
+
+
 def test_api_canonize_digest_option():
     from jsonld_js_spark.kernel import api
 

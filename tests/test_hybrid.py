@@ -349,3 +349,12 @@ def test_hybrid_plain_path_has_no_python_stage(spark):
     assert "ArrowEvalPython" not in plan and "MapInPandas" not in plan
     assert re.search(r"\*\(\d+\) Generate", plan), plan
     assert "lambda" not in plan
+    # the subject is built once per turn below the explode, not once
+    # per exploded struct (Generate gets no subexpression elimination)
+    assert plan.count("/turn/") == 1, plan
+
+
+def test_session_disables_dataframe_call_site_capture(spark):
+    """build_session turns PySpark's per-Column call-site capture off."""
+    assert spark.conf.get(
+        "spark.python.sql.dataFrameDebugging.enabled") == "false"

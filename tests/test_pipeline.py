@@ -147,6 +147,27 @@ def test_canonicalize_mode(spark, transcripts):
     assert tri.count() > 0
 
 
+def test_options_reach_the_executors(spark):
+    """extract_triples ships its options with the Python stage: a
+    remote @context resolves through the driver-preloaded loader."""
+    ctx = "https://example.org/contexts/person.jsonld"
+    text = ('{"@context": "%s", "@id": "https://example.org/p/1", '
+            '"name": "Ada"}' % ctx)
+    tx = spark.createDataFrame(
+        [("c", 0, "user", text, None, None)],
+        "conv_id string, turn_idx int, role string, text string, "
+        "tool string, ts timestamp")
+    loader = {ctx: {"@context": {"name": "http://schema.org/name"}}}
+    ext = extract_triples(tx, options={"context_loader": loader})
+    assert warnings_only(ext).count() == 0
+    assert [(r["subj"], r["pred"], r["obj_value"])
+            for r in triples_only(ext).collect()] == [
+        ("https://example.org/p/1", "http://schema.org/name", "Ada")]
+    # without the loader the same turn degrades to a warning row
+    codes = [r["code"] for r in warnings_only(extract_triples(tx)).collect()]
+    assert codes == ["loading remote context failed"]
+
+
 def test_nquad_lines_match_kernel_serializer(transcripts, extracted):
     """The JVM-side N-Quads formatter must agree with the kernel's."""
     from jsonld_js_spark.kernel.nquads import serialize

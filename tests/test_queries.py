@@ -248,3 +248,38 @@ def test_token_demo_pairs_contained_in_minhash_scale_path(spark):
         high_missed = [(p, by_rep.get(p)) for p in missed
                        if by_rep.get(p, 0.0) >= 0.95]
         assert not high_missed, high_missed
+
+
+@pytest.fixture(scope="module")
+def boundary_sf(tmp_path_factory):
+    """One (lang, source) block holding a 3,203-token document inside a
+    4,004-token one: J = 0.79995..., which rounds onto the 0.8
+    threshold (the smallest such subset pair)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    texts = [" ".join(f"t{i}" for i in range(n)) for n in (3203, 4004)]
+    sf = tmp_path_factory.mktemp("boundary_sf")
+    pq.write_table(pa.table({
+        "doc_id": pa.array([1, 2], pa.int64()), "text": texts,
+        "lang": ["en", "en"], "source": ["web", "web"],
+        "n_chars": pa.array([len(t) for t in texts], pa.int64())}),
+        sf / "documents.parquet")
+    return str(sf)
+
+
+def test_token_jaccard_oracle_keeps_rounded_boundary_pair(boundary_sf):
+    """The DuckDB oracle compares ROUND(J, 4) with the threshold, as the
+    Spark leaves do, so the pair that rounds onto 0.8 is kept."""
+    from jsonld_js_spark.queries import ORACLE_DOC_JACCARD
+
+    con = duckdb.connect()
+    con.execute("CREATE VIEW documents AS SELECT * FROM read_parquet("
+                f"'{boundary_sf}/documents.parquet')")
+    assert con.execute(ORACLE_DOC_JACCARD).fetchall() == [(1, 2, 0.8)]
+    con.close()
+
+
+def test_token_jaccard_leaf_keeps_rounded_boundary_pair(spark, boundary_sf):
+    fn = QUERIES["doc_dedup_token_jaccard"][0]
+    assert [tuple(r) for r in fn(spark, boundary_sf).collect()] == [(1, 2, 0.8)]
