@@ -1,16 +1,19 @@
 """The flagship pipeline: transcripts -> triples, fused in ONE Arrow stage.
 
 Stage plan (SURVEY §3.1):
-  stage 1 (narrow, no shuffle): read transcripts -> mapInPandas running
-    parse -> context -> expand -> nodeMap -> toRDF (and optionally
-    RDFC-1.0 canonicalization) per turn, entirely inside Arrow batches;
+  stage 1 (narrow, no shuffle): read transcripts -> one scalar Arrow
+    UDF, ``kernel_rows``, running parse -> context -> expand -> nodeMap
+    -> toRDF (and optionally RDFC-1.0 canonicalization) per turn,
+    entirely inside Arrow batches -> one Generate exploding its per-turn
+    arrays; the hybrid computes its route once per turn and explodes
+    either the kernel's rows or the JVM-built envelope rows;
   stage 2 (the only shuffle): repartition by subject hash, dedupe,
     write.
 
 The reference materializes each intermediate representation
 (lib/jsonld.js:697 -> lib/toRdf.js:53); we never do — Python<->JVM
 crossings dominate at scale, so the whole per-document path is one
-generator over Arrow record batches (SURVEY §4 item 1).
+Python call per Arrow record batch (SURVEY §4 item 1).
 
 Blank-node labels are salted per turn (`_:b<hash(conv,turn)>-<n>`) so
 labels are dataset-unique without any cross-document coordination —
@@ -21,13 +24,12 @@ from __future__ import annotations
 
 import hashlib
 import json
-from typing import Iterator
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions import nquad_term
-from ..kernel.api import expand as k_expand
+from ..kernel.api import _prepare as k_prepare, expand as k_expand
 from ..kernel.canon import PoisonedDatasetError, canonical_id_map, relabel_quads
 from ..kernel.errors import JsonLdError
 from ..kernel.nodemap import IdentifierIssuer
@@ -141,7 +143,7 @@ def envelope_doc(conv_id: str, turn_idx: int, role: str, text: str,
         "role": role,
         "text": text if text is not None else "",
     }
-    # null timestamps arrive as pandas NaT inside Arrow batches (NaT != NaT)
+    # a null timestamp from a pandas frame is NaT (NaT != NaT)
     if ts is not None and ts == ts:
         doc["ts"] = ts.isoformat() if hasattr(ts, "isoformat") else str(ts)
     if role is None:
@@ -227,6 +229,65 @@ def turn_to_quads(conv_id: str, turn_idx: int, role: str, text: str,
     return quads, events
 
 
+# kernel_rows' array element: the TRIPLE_SCHEMA fields after
+# (conv_id, turn_idx), all strings
+_ROW_FIELDS = tuple(f.split()[0] for f in TRIPLE_SCHEMA.split(", ")[2:])
+_TURN_COLS = ("conv_id", "turn_idx", "role", "text", "tool", "ts")
+
+
+def _kernel_rows(*, canonicalize: bool, options: dict | None):
+    """Both extractors' one Python entry point: the scalar Arrow UDF
+    ``kernel_rows(conv_id, turn_idx, role, text, tool, ts)``, the rows
+    of ``turn_to_quads`` per turn as ``array<struct<_ROW_FIELDS>>``, NULL
+    where ``conv_id`` is NULL. A bad option raises here, on the driver,
+    not as a warning row per turn in the workers."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    k_prepare(options)
+    # captured in the closure: PySpark broadcasts a pickled command over
+    # 1 MB itself, so a large context_loader still travels once
+    opts = dict(options or {})
+
+    def kernel_rows(conv_id, turn_idx, role, text, tool, ts):
+        if pa.types.is_timestamp(ts.type) and ts.type.tz is not None:
+            # session-local wall time, as Spark's pandas conversion gives
+            ts = pc.local_timestamp(ts)
+        # quads_to_rows' tuples are transposed once per batch (C-level
+        # zip): cheaper than eight appends per row on the hot path
+        kinds, rows, offsets, nulls = [], [], [0], []
+        for turn in zip(conv_id.to_pylist(), turn_idx.to_pylist(),
+                        role.to_pylist(), text.to_pylist(),
+                        tool.to_pylist(), ts.to_pylist()):
+            nulls.append(turn[0] is None)
+            if turn[0] is not None:
+                quads, events = turn_to_quads(
+                    *turn, canonicalize=canonicalize, options=opts)
+                triples = quads_to_rows(quads)
+                rows += triples
+                rows += [(None, None, None, None, e["code"], e.get("message"),
+                          None) for e in events]
+                kinds += ["triple"] * len(triples) + ["warning"] * len(events)
+            offsets.append(len(rows))
+        out = [kinds, *(zip(*rows) if rows else [()] * 7)]
+        values = pa.StructArray.from_arrays(
+            [pa.array(c, pa.string()) for c in out], names=_ROW_FIELDS)
+        return pa.ListArray.from_arrays(pa.array(offsets, pa.int32()),
+                                        values, mask=pa.array(nulls))
+
+    return F.arrow_udf(kernel_rows, "array<struct<{}>>".format(
+        ", ".join(f"{f}: string" for f in _ROW_FIELDS)))
+
+
+def _extracted(turns: DataFrame, rows) -> DataFrame:
+    """(conv_id, turn_idx, one array of row structs per turn) ->
+    TRIPLE_SCHEMA rows."""
+    return (turns.select("conv_id", "turn_idx", F.explode(rows).alias("r"))
+            .filter(F.col("r").isNotNull())
+            .select(F.col("conv_id").cast("string").alias("conv_id"),
+                    F.col("turn_idx").cast("int").alias("turn_idx"), "r.*"))
+
+
 def extract_triples(transcripts: DataFrame, *, canonicalize: bool = False,
                     options: dict | None = None) -> DataFrame:
     """transcripts(conv_id, turn_idx, role, text, tool, ts) -> long
@@ -234,56 +295,12 @@ def extract_triples(transcripts: DataFrame, *, canonicalize: bool = False,
     columns; kind='warning' rows carry (obj_value=code,
     obj_datatype=message) — the warnings column of SURVEY §2.10 in
     long form, filterable without a second pass.
+
+    Every turn crosses into the kernel through one scalar Arrow UDF,
+    whose per-turn arrays one Generate explodes.
     """
-    import pandas as pd
-
-    # captured in the closure, not broadcast per call: PySpark already
-    # ships a pickled command over its broadcast threshold (1 MB) as a
-    # broadcast, so a large context_loader still travels once
-    opts = dict(options or {})
-    cols = ("conv_id", "turn_idx", "kind", "graph", "subj", "pred",
-            "obj_kind", "obj_value", "obj_datatype", "obj_lang")
-
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            # column-wise accumulation: building pandas from 10 flat
-            # lists is ~5x cheaper than from a list of row tuples, and
-            # this allocation is the per-batch hot path
-            out: tuple[list, ...] = tuple([] for _ in cols)
-            (c_conv, c_turn, c_kind, c_graph, c_subj, c_pred,
-             c_okind, c_oval, c_odt, c_olang) = out
-            for conv_id, turn_idx, role, text, tool, ts in zip(
-                    pdf["conv_id"], pdf["turn_idx"], pdf["role"],
-                    pdf["text"], pdf["tool"], pdf["ts"]):
-                turn_idx = int(turn_idx)
-                quads, events = turn_to_quads(
-                    conv_id, turn_idx, role, text, tool, ts,
-                    canonicalize=canonicalize, options=opts)
-                for graph, subj, pred, okind, oval, odt, olang in quads_to_rows(quads):
-                    c_conv.append(conv_id)
-                    c_turn.append(turn_idx)
-                    c_kind.append("triple")
-                    c_graph.append(graph)
-                    c_subj.append(subj)
-                    c_pred.append(pred)
-                    c_okind.append(okind)
-                    c_oval.append(oval)
-                    c_odt.append(odt)
-                    c_olang.append(olang)
-                for e in events:
-                    c_conv.append(conv_id)
-                    c_turn.append(turn_idx)
-                    c_kind.append("warning")
-                    c_graph.append(None)
-                    c_subj.append(None)
-                    c_pred.append(None)
-                    c_okind.append(None)
-                    c_oval.append(e["code"])
-                    c_odt.append(e.get("message"))
-                    c_olang.append(None)
-            yield pd.DataFrame(dict(zip(cols, out)))
-
-    return transcripts.mapInPandas(run, schema=TRIPLE_SCHEMA)
+    kernel_rows = _kernel_rows(canonicalize=canonicalize, options=options)
+    return _extracted(transcripts, kernel_rows(*_TURN_COLS))
 
 
 _XSD = "http://www.w3.org/2001/XMLSchema#"
@@ -364,17 +381,17 @@ def _needs_kernel_col():
 
 
 def _envelope_row(pred: str, kind: str, value: str, dt: str | None) -> str:
-    """SQL of one exploded (pred, obj_kind, obj_value, obj_datatype)
-    struct; `value` is a SQL expression over the per-turn projection."""
+    """SQL of one envelope row struct (the _ROW_FIELDS of kernel_rows);
+    `value` is a SQL expression over the per-turn projection."""
     dt_sql = f"'{dt}'" if dt else "CAST(NULL AS STRING)"
-    return (f"named_struct('pred', '{pred}', 'obj_kind', '{kind}', "
-            f"'obj_value', {value}, 'obj_datatype', {dt_sql})")
+    return (f"named_struct('kind', 'triple', 'graph', '', 'subj', subj, "
+            f"'pred', '{pred}', 'obj_kind', '{kind}', 'obj_value', {value}, "
+            f"'obj_datatype', {dt_sql}, 'obj_lang', CAST(NULL AS STRING))")
 
 
 # The envelope rows of one turn; a NULL element (absent role, ts or
-# fast-path tool) is dropped after the explode. Routing guarantees any
-# tool payload reaching the JVM branch passes the fast-path gate; the
-# `tool_ok` guard keeps the operator safe standalone.
+# tool) is dropped after the explode. Routing guarantees any tool
+# payload on the envelope route passes the fast-path gate.
 _ENVELOPE_ROWS = "array({})".format(", ".join((
     _envelope_row(_RDF_TYPE, "iri", f"'{V}Turn'", None),
     _envelope_row(V + "conversation", "iri", "conv_iri", None),
@@ -384,69 +401,51 @@ _ENVELOPE_ROWS = "array({})".format(", ".join((
     _envelope_row(V + "turnIndex", "literal", "turn_s", _XSD + "integer"),
     "IF(ts_iso IS NULL, NULL, {})".format(
         _envelope_row(V + "ts", "literal", "ts_iso", _XSD + "dateTime")),
-    "IF(tool_ok, {}, NULL)".format(
+    "IF(tool IS NULL, NULL, {})".format(
         _envelope_row(V + "invokes", "iri", "tool_iri", None)),
-    "IF(tool_ok, {}, NULL)".format(
+    "IF(tool IS NULL, NULL, {})".format(
         _envelope_row(V + "toolArgs", "literal", "tool_jcs", _RDF_JSON)),
 )))
 
 
-def _envelope_triples_jvm(plain: DataFrame) -> DataFrame:
-    """Envelope triples for plain turns as pure column algebra — stays
-    inside whole-stage codegen, no Python worker at all. Byte-parity
-    with the kernel path is asserted in tests/test_pipeline.py.
-
-    Every per-turn value (subject, conversation IRI, timestamp, tool
-    gate, name and JCS) is computed once in the projection below the
-    explode: Generate gets no common-subexpression elimination, so an
-    expression inside the exploded array runs once per element. The
-    structs carry only the four per-row fields; the constant `graph`
-    and `obj_lang` and the shared subject are added after the explode."""
+def extract_triples_hybrid(transcripts: DataFrame, *,
+                           options: dict | None = None) -> DataFrame:
+    """The scale path: same output as ``extract_triples``, but only
+    JSON-LD documents and tool payloads outside the fast-path grammar
+    (route ``k``, computed once per turn) run the kernel. Its UDF gets
+    every input as ``when(k, col)``, so other turns cross as NULLs; their
+    envelope rows are JVM column algebra over values a Project computes
+    once per turn (Generate has no common-subexpression elimination),
+    and one ``explode(IF(k, kernel rows, envelope rows))`` stays under
+    whole-stage codegen. No repartition before the UDF: the extra
+    exchange measured 0.89x (OPTIMIZATION_r06.md)."""
+    kernel_rows = _kernel_rows(canonicalize=False, options=options)
+    k = F.col("k")
     # python isoformat(): fractional part only when non-zero micros
     ts_short = F.date_format("ts", "yyyy-MM-dd'T'HH:mm:ss")
     ts_micro = F.date_format("ts", "SSSSSS")
-    tool_simple, tool_name, tool_jcs = _tool_fast_cols()
-    per_turn = plain.select(
-        "conv_id", "turn_idx", "role",
-        F.concat(F.lit("https://example.org/conv/"), "conv_id", F.lit("/turn/"),
-                 "turn_idx").alias("subj"),
-        F.concat(F.lit("https://example.org/conv/"), "conv_id")
-        .alias("conv_iri"),
-        F.col("turn_idx").cast("string").alias("turn_s"),
-        F.coalesce("text", F.lit("")).alias("text"),
-        F.when(ts_micro == "000000", ts_short)
-        .otherwise(F.concat(ts_short, F.lit("."), ts_micro)).alias("ts_iso"),
-        (F.col("tool").isNotNull() & tool_simple).alias("tool_ok"),
-        F.concat(F.lit("https://example.org/tool/"), tool_name)
-        .alias("tool_iri"),
-        tool_jcs.alias("tool_jcs"))
-    return (per_turn
-            .select("conv_id", "turn_idx", "subj",
-                    F.explode(F.expr(_ENVELOPE_ROWS)).alias("r"))
-            .filter(F.col("r").isNotNull())
-            .select("conv_id", "turn_idx", F.lit("triple").alias("kind"),
-                    F.lit("").alias("graph"), "subj", "r.*",
-                    F.lit(None).cast("string").alias("obj_lang")))
-
-
-def extract_triples_hybrid(transcripts: DataFrame, *,
-                           options: dict | None = None) -> DataFrame:
-    """The scale path: plain turns AND turns whose only complexity is a
-    JCS-safe flat tool payload (the overwhelmingly common tool shape)
-    emit their triples in the JVM; only JSON-LD-document turns and
-    tool payloads outside the provable grammar cross into the Arrow
-    kernel. Same output as ``extract_triples`` (parity-tested), but the
-    common cases never leave whole-stage codegen."""
-    needs_kernel = _needs_kernel_col()
-    plain = transcripts.filter(~needs_kernel)
-    # NOT repartitioned before the Arrow stage: an interleaved pinned
-    # A/B measured the extra exchange+stage barrier at 0.89x (the
-    # in-place sparse mapInPandas tasks overlap with the scan; the
-    # exchange serializes them behind it) — see OPTIMIZATION_r06.md.
-    complex_turns = transcripts.filter(needs_kernel)
-    jvm_part = _envelope_triples_jvm(plain)
-    kernel_part = extract_triples(complex_turns, options=options)
-    return jvm_part.unionByName(kernel_part)
+    _, tool_name, tool_jcs = _tool_fast_cols()
+    per_turn = (
+        transcripts.select(*_TURN_COLS, _needs_kernel_col().alias("k"))
+        .select(
+            "conv_id", "turn_idx", "k",
+            kernel_rows(*(F.when(k, F.col(c)) for c in _TURN_COLS))
+            .alias("kernel_rows"),
+            "role", "tool",
+            F.concat(F.lit("https://example.org/conv/"), "conv_id",
+                     F.lit("/turn/"), "turn_idx").alias("subj"),
+            F.concat(F.lit("https://example.org/conv/"), "conv_id")
+            .alias("conv_iri"),
+            F.col("turn_idx").cast("string").alias("turn_s"),
+            F.coalesce("text", F.lit("")).alias("text"),
+            F.when(ts_micro == "000000", ts_short)
+            .otherwise(F.concat(ts_short, F.lit("."), ts_micro))
+            .alias("ts_iso"),
+            F.concat(F.lit("https://example.org/tool/"), tool_name)
+            .alias("tool_iri"),
+            tool_jcs.alias("tool_jcs")))
+    return _extracted(per_turn,
+                      F.expr(f"IF(k, kernel_rows, {_ENVELOPE_ROWS})"))
 
 
 def triples_only(extracted: DataFrame) -> DataFrame:

@@ -304,7 +304,7 @@ def _tordf_customers_raw(spark, sf_dir):
     c2 = (c.join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
           .select("c_custkey", "c_name", "c_mktsegment", "n_nationkey", "n_name"))
     # spread the single-split scan before the per-row kernel stage
-    # (_spread: test-data plumbing; the mapInPandas kernel would
+    # (_spread: test-data plumbing; the kernel Arrow UDF would
     # otherwise run in ONE task)
     c2 = _spread(c2, "c_custkey")
     doc_text = F.concat(
@@ -1521,7 +1521,7 @@ def kg_extract_documents(spark, sf_dir):
     sees the same input: every turn takes the envelope path, whose
     five triples the oracle reconstructs with string concat (the
     ORACLE_KG_TORDF pattern). This is the hash-level driver gate for
-    the extraction pipeline itself (mapInPandas -> expand -> toRDF)."""
+    the extraction pipeline itself (kernel UDF -> expand -> toRDF)."""
     from .operators.pipeline import extract_triples, triples_only
 
     tx = _docs_as_transcripts(spark, sf_dir)

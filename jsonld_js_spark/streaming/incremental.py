@@ -74,7 +74,7 @@ def stream_extract(spark: SparkSession, input_dir: str, *,
     """readStream over a transcript directory -> streaming triples DF.
 
     Caller attaches writeStream (parquet/console/memory sink). The
-    fused mapInPandas stage is stateless, so it runs unchanged under
+    fused Arrow UDF stage is stateless, so it runs unchanged under
     the micro-batch engine.
     """
     from ..operators.pipeline import extract_triples, triples_only

@@ -331,27 +331,76 @@ def test_hybrid_tool_fast_path_fires(spark):
     tx.unpersist()
 
 
-def test_hybrid_plain_path_has_no_python_stage(spark):
-    """The plan for plain and fast-path tool turns must not contain a
-    Python/Arrow eval node — that's the point of the fast path — and
-    its Generate must run under whole-stage codegen: any higher-order
-    function (transform, filter, array_compact, ...) is evaluated
-    interpreted and takes the Generate out of it."""
+def _executed_plan(df):
+    df.write.format("noop").mode("overwrite").save()
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def test_hybrid_plain_path_has_no_python_stage(spark, tmp_path):
+    """The hybrid is one plan over one scan: the route is computed once,
+    plain and fast-path tool turns cross the one kernel UDF as NULLs
+    (no union, no second Python stage, no re-run of the tool gate), and
+    the envelope Generate runs under whole-stage codegen: any
+    higher-order function (transform, filter, array_compact, ...) is
+    evaluated interpreted and takes the Generate out of it."""
     import datetime
     import re
-    tx = spark.createDataFrame(
+    spark.createDataFrame(
         [("c", 0, "user", "plain text", None, datetime.datetime(2026, 1, 1)),
          ("c", 1, "tool", "r", '{"args": {"q": "x"}, "name": "t"}', None)],
         "conv_id string, turn_idx int, role string, text string, "
-        "tool string, ts timestamp")
-    from jsonld_js_spark.operators.pipeline import _envelope_triples_jvm
-    plan = _envelope_triples_jvm(tx)._jdf.queryExecution().executedPlan().toString()
-    assert "ArrowEvalPython" not in plan and "MapInPandas" not in plan
+        "tool string, ts timestamp").write.parquet(str(tmp_path / "tx"))
+    tx = spark.read.parquet(str(tmp_path / "tx"))
+    plan = _executed_plan(extract_triples_hybrid(tx))
     assert re.search(r"\*\(\d+\) Generate", plan), plan
     assert "lambda" not in plan
     # the subject is built once per turn below the explode, not once
     # per exploded struct (Generate gets no subexpression elimination)
     assert plan.count("/turn/") == 1, plan
+    for node, n in (("FileScan", 1), ("Union", 0), ("MapInPandas", 0),
+                    ("ArrowEvalPython", 1), ("Generate", 1),
+                    # the tool gate and the JSON probe: once, in the route
+                    ("RLIKE(tool", 1), ("get_json_object", 1)):
+        assert plan.count(node) == n, (node, plan)
+    plan = _executed_plan(extract_triples(tx))
+    for node, n in (("FileScan", 1), ("MapInPandas", 0),
+                    ("ArrowEvalPython", 1), ("Generate", 1)):
+        assert plan.count(node) == n, (node, plan)
+
+
+def test_session_time_zone_at_the_arrow_crossing(spark):
+    """Timestamps reach the kernel as session-local wall time, as the
+    JVM envelope formats them: under Asia/Kolkata both extractors agree
+    row for row on a plain turn (JVM route) and a tool turn with
+    unsorted keys (kernel route)."""
+    from pyspark.sql import functions as F
+
+    epoch = datetime.datetime(1970, 1, 1, tzinfo=datetime.timezone.utc)
+
+    def micros(*args):
+        t = datetime.datetime(*args, tzinfo=datetime.timezone.utc)
+        return (t - epoch) // datetime.timedelta(microseconds=1)
+
+    zone = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", "Asia/Kolkata")
+    try:
+        df = spark.createDataFrame(
+            [("c", 0, "user", "plain", None,
+              micros(2026, 3, 1, 23, 45, 6, 123456)),
+             ("c", 1, "tool", "r", '{"args": {"b": "x", "a": "y"}, '
+              '"name": "t"}', micros(2026, 3, 1, 20, 0, 0)),
+             ("c", 2, "user", "plain", None, None)],
+            "conv_id string, turn_idx int, role string, text string, "
+            "tool string, us long",
+        ).select("conv_id", "turn_idx", "role", "text", "tool",
+                 F.timestamp_micros("us").alias("ts"))
+        a = _collect(triples_only(extract_triples(df)))
+        b = _collect(triples_only(extract_triples_hybrid(df)))
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", zone)
+    assert a == b
+    ts = {r[1]: r[6] for r in a if r[4].endswith("#ts")}
+    assert ts == {0: "2026-03-02T05:15:06.123456", 1: "2026-03-02T01:30:00"}
 
 
 def test_session_disables_dataframe_call_site_capture(spark):

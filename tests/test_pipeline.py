@@ -168,6 +168,22 @@ def test_options_reach_the_executors(spark):
     assert codes == ["loading remote context failed"]
 
 
+def test_bad_kernel_option_fails_loudly(spark):
+    """An option the kernel rejects raises when the extraction is
+    built, on both extractors: in the workers it would turn every turn
+    into zero quads and a warning row."""
+    from jsonld_js_spark.kernel.errors import JsonLdError
+    from jsonld_js_spark.operators.pipeline import extract_triples_hybrid
+
+    tx = spark.createDataFrame(
+        [("c", 0, "user", "plain", None, None)],
+        "conv_id string, turn_idx int, role string, text string, "
+        "tool string, ts timestamp")
+    for extract in (extract_triples, extract_triples_hybrid):
+        with pytest.raises(JsonLdError, match="expansionMap"):
+            extract(tx, options={"expansionMap": lambda info: None})
+
+
 def test_nquad_lines_match_kernel_serializer(transcripts, extracted):
     """The JVM-side N-Quads formatter must agree with the kernel's."""
     from jsonld_js_spark.kernel.nquads import serialize
