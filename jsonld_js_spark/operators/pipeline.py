@@ -59,11 +59,9 @@ def _doc_salt(conv_id: str, turn_idx: int) -> str:
 def _reject_json_constant(tok: str):
     """JSON.parse strictness for document/tool text: Python's
     json.loads accepts NaN/Infinity/-Infinity, the reference's
-    JSON.parse (and the JVM routing probe's Jackson) do not. Texts
-    carrying those tokens must not parse as documents here either —
-    they fall back to the envelope / toolRaw exactly like any other
-    invalid JSON, keeping the kernel path, the hybrid JVM routing, and
-    the reference in three-way agreement (probe: tests/test_hybrid.py)."""
+    JSON.parse does not. Texts carrying those tokens must not parse as
+    documents here either: they fall back to the envelope / toolRaw
+    like any other invalid JSON (probe: tests/test_hybrid.py)."""
     raise ValueError(f"non-standard JSON token {tok!r}")
 
 
@@ -71,52 +69,10 @@ def _reject_json_constant(tok: str):
 # JSONDecoder per call; this is the per-turn hot path
 _STRICT_JSON = json.JSONDecoder(parse_constant=_reject_json_constant)
 
-# Jackson's StreamReadConstraints in this Spark build (probed through
-# get_json_object, boundaries pinned by tests/test_hybrid.py): a JSON
-# number may carry at most 1000 digits (sign/dot/'e' excluded, integer
-# + fraction + exponent digits all counted), an object member name at
-# most 50,000 chars, a string value at most ~20,000,000 chars. Python's
-# parser has none of these limits, so a text over a limit would parse
-# as a document on the kernel path while the hybrid's JVM probe routes
-# it to the envelope — the same asymmetry class as the NaN tokens
-# above. The BIG decoder mirrors the number and name limits exactly
-# (and string values in object members); a >20M-char string as an ARRAY
-# element cannot be mirrored (stock json has no array hook), so the
-# hybrid routes every text over _JK_MAX_STRING chars to the kernel.
-_JK_MAX_NUM_DIGITS = 1000
-_JK_MAX_NAME = 50_000
-_JK_MAX_STRING = 20_000_000
-
-
-def _jk_num(ctor):
-    def convert(s: str):
-        if len(s) > _JK_MAX_NUM_DIGITS and \
-                sum(c.isdigit() for c in s) > _JK_MAX_NUM_DIGITS:
-            raise ValueError("JSON number exceeds the probe's digit limit")
-        return ctor(s)
-    return convert
-
-
-def _jk_pairs(pairs):
-    for k, v in pairs:
-        if len(k) > _JK_MAX_NAME:
-            raise ValueError("JSON member name exceeds the probe's limit")
-        if isinstance(v, str) and len(v) > _JK_MAX_STRING:
-            raise ValueError("JSON string exceeds the probe's limit")
-    return dict(pairs)
-
-
-_STRICT_JSON_BIG = json.JSONDecoder(
-    parse_constant=_reject_json_constant,
-    parse_int=_jk_num(int), parse_float=_jk_num(float),
-    object_pairs_hook=_jk_pairs)
-
 
 def _parse_doc_text(text: str):
-    """Strict-JSON parse of document/tool text with Jackson-equivalent
-    limits. A text of <= 1000 chars cannot violate any mirrored limit,
-    so the common case keeps the stock C-speed number/object paths."""
-    return (_STRICT_JSON_BIG if len(text) > 1000 else _STRICT_JSON).decode(text)
+    """The one judge of document and tool text, on both extractors."""
+    return _STRICT_JSON.decode(text)
 
 
 def looks_like_jsonld(text: str) -> bool:
@@ -234,13 +190,21 @@ def turn_to_quads(conv_id: str, turn_idx: int, role: str, text: str,
 _ROW_FIELDS = tuple(f.split()[0] for f in TRIPLE_SCHEMA.split(", ")[2:])
 _TURN_COLS = ("conv_id", "turn_idx", "role", "text", "tool", "ts")
 
+# the one row of a turn whose conv_id or turn_idx is NULL: a warning
+# with every triple field NULL, as the kernel's warning rows have
+_MISSING_KEY_ROWS = (
+    "array(named_struct('kind', 'warning', 'graph', {n}, 'subj', {n}, "
+    "'pred', {n}, 'obj_kind', {n}, 'obj_value', 'missing turn key', "
+    "'obj_datatype', 'conv_id or turn_idx is NULL', 'obj_lang', {n}))"
+).format(n="CAST(NULL AS STRING)")
+
 
 def _kernel_rows(*, canonicalize: bool, options: dict | None):
     """Both extractors' one Python entry point: the scalar Arrow UDF
     ``kernel_rows(conv_id, turn_idx, role, text, tool, ts)``, the rows
     of ``turn_to_quads`` per turn as ``array<struct<_ROW_FIELDS>>``, NULL
-    where ``conv_id`` is NULL. A bad option raises here, on the driver,
-    not as a warning row per turn in the workers."""
+    where ``conv_id`` or ``turn_idx`` is NULL. A bad option raises here,
+    on the driver, not as a warning row per turn in the workers."""
     import pyarrow as pa
     import pyarrow.compute as pc
 
@@ -259,8 +223,9 @@ def _kernel_rows(*, canonicalize: bool, options: dict | None):
         for turn in zip(conv_id.to_pylist(), turn_idx.to_pylist(),
                         role.to_pylist(), text.to_pylist(),
                         tool.to_pylist(), ts.to_pylist()):
-            nulls.append(turn[0] is None)
-            if turn[0] is not None:
+            keyless = turn[0] is None or turn[1] is None
+            nulls.append(keyless)
+            if not keyless:
                 quads, events = turn_to_quads(
                     *turn, canonicalize=canonicalize, options=opts)
                 triples = quads_to_rows(quads)
@@ -281,7 +246,10 @@ def _kernel_rows(*, canonicalize: bool, options: dict | None):
 
 def _extracted(turns: DataFrame, rows) -> DataFrame:
     """(conv_id, turn_idx, one array of row structs per turn) ->
-    TRIPLE_SCHEMA rows."""
+    TRIPLE_SCHEMA rows. A turn without a key gets one warning row and
+    no triples on either extractor, whatever its route."""
+    keyless = F.col("conv_id").isNull() | F.col("turn_idx").isNull()
+    rows = F.when(keyless, F.expr(_MISSING_KEY_ROWS)).otherwise(rows)
     return (turns.select("conv_id", "turn_idx", F.explode(rows).alias("r"))
             .filter(F.col("r").isNotNull())
             .select(F.col("conv_id").cast("string").alias("conv_id"),
@@ -307,7 +275,7 @@ _XSD = "http://www.w3.org/2001/XMLSchema#"
 _RDF_TYPE = "http://www.w3.org/1999/02/22-rdf-syntax-ns#type"
 _RDF_JSON = "http://www.w3.org/1999/02/22-rdf-syntax-ns#JSON"
 
-# JVM twin of looks_like_jsonld(): shape check + Jackson parse probe
+# JVM twin of looks_like_jsonld()'s shape check
 _JSONLD_SHAPE = r'^\s*[\[{]'
 
 # JCS-safe flat tool payload: the exact textual form
@@ -332,19 +300,18 @@ def _tool_fast_cols():
     """(simple?, name, jcs_of_args) for the JVM tool fast path.
 
     ``simple`` accepts a payload in _TOOL_SIMPLE_RE whose keys are
-    strictly ascending and which is short enough that no key or value
-    can exceed the BIG decoder's Jackson limits (those payloads become
-    toolRaw on the kernel path). The rlike comes first, so the key
-    extraction only runs on payloads it accepts. Within the grammar the
-    only '"' characters are the string delimiters, and ',', ':' and ' '
-    may appear inside keys and values, so both regexes below consume
-    whole '"key": "value"' pairs from a key's opening quote: a match
-    can never start inside a string. The JCS of a strictly ascending
-    args object is then its text with the space after each pair's ':'
-    and ',' removed (binary order == UTF-16 code-unit order on the
-    ASCII-only grammar). Unsorted or duplicate keys route to the
-    kernel, which sorts and keeps the last duplicate (battery:
-    tests/test_hybrid.py).
+    strictly ascending; every such payload is valid JSON of any length,
+    so the kernel's parser reads it as a tool call too. The rlike comes
+    first, so the key extraction only runs on payloads it accepts.
+    Within the grammar the only '"' characters are the string
+    delimiters, and ',', ':' and ' ' may appear inside keys and values,
+    so both regexes below consume whole '"key": "value"' pairs from a
+    key's opening quote: a match can never start inside a string. The
+    JCS of a strictly ascending args object is then its text with the
+    space after each pair's ':' and ',' removed (binary order == UTF-16
+    code-unit order on the ASCII-only grammar). Unsorted or duplicate
+    keys route to the kernel, which sorts and keeps the last duplicate
+    (battery: tests/test_hybrid.py).
 
     No higher-order function here: one would drop the whole envelope
     Generate out of whole-stage codegen."""
@@ -353,7 +320,6 @@ def _tool_fast_cols():
     keys = F.regexp_extract_all(args_str, F.lit('"([^"]*)": "[^"]*"'),
                                 F.lit(1))
     simple = (tool.rlike(_TOOL_SIMPLE_RE)
-              & (F.length(tool) <= _JK_MAX_NAME)
               & (keys == F.sort_array(F.array_distinct(keys))))
     name = F.regexp_extract(tool, r', "name": "([A-Za-z0-9_.-]+)"\}$', 1)
     jcs = F.regexp_replace(args_str, r'("[^"]*"): ("[^"]*")(,?) ?',
@@ -362,22 +328,23 @@ def _tool_fast_cols():
 
 
 def _is_doc_col():
+    """Texts that may be JSON-LD documents: ``looks_like_jsonld``'s
+    shape on the JVM. It only decides which turns the kernel sees; the
+    kernel's parser decides which of them are documents, and the rest
+    take the envelope there. Nothing the parser accepts can miss this
+    route: JSON whitespace ``[ \\t\\n\\r]`` is a subset of Java's ``\\s``."""
     shape = F.col("text").rlike(_JSONLD_SHAPE) & (
         F.col("text").contains("@context") | F.col("text").contains("@id")
         | F.col("text").contains("@graph") | F.col("text").contains("@type")
         | F.col("text").contains('"@value"'))
-    parses = F.get_json_object("text", "$").isNotNull()
-    return F.col("text").isNotNull() & shape & parses
+    return F.col("text").isNotNull() & shape
 
 
 def _needs_kernel_col():
-    """The hybrid's routing predicate: JSON-LD documents, tool payloads
-    outside the fast path, and texts too long for the JVM probe to
-    judge the way the kernel's parser does."""
+    """The hybrid's routing predicate: texts shaped like JSON-LD
+    documents and tool payloads outside the fast path."""
     tool_simple, _, _ = _tool_fast_cols()
-    return (_is_doc_col() | (F.col("tool").isNotNull() & ~tool_simple)
-            | (F.col("text").isNotNull()
-               & (F.length("text") > _JK_MAX_STRING)))
+    return _is_doc_col() | (F.col("tool").isNotNull() & ~tool_simple)
 
 
 def _envelope_row(pred: str, kind: str, value: str, dt: str | None) -> str:

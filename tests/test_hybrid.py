@@ -36,21 +36,29 @@ def test_hybrid_matches_kernel_on_hostile_rows(spark):
         ("c", 4, None, "plain", None, None),
         ("c", 5, "user", "", None, ts),
         # NaN/Infinity tokens: Python json.loads accepts them, the
-        # reference's JSON.parse and the JVM Jackson probe do not —
-        # both paths must agree these are NOT documents (r6 fix:
-        # parse_constant strictness in turn_to_quads)
+        # reference's JSON.parse does not — both paths must agree these
+        # are NOT documents (parse_constant strictness in turn_to_quads)
         ("c", 6, "user", '{"@id": "http://example.org/s", "a": NaN}',
          None, ts),
         ("c", 7, "user", '{"@id": "http://example.org/s", "a": Infinity}',
          None, ts),
         ("c", 8, "tool", "r", '{"args": {"q": NaN}, "name": "x"}', ts),
     ]
+    # a valid doc behind each leading character: Java's \s (the JVM
+    # shape check) and Python's str.lstrip (looks_like_jsonld) each
+    # take some of them for whitespace, JSON only " \t\n\r"
+    doc = '{"@id": "http://example.org/d", "http://example.org/p": "v"}'
+    leads = ["", " \t\n\r", "\x0b", "\x0c", "\xa0", "\u2028", "\x1c",
+             "\ufeff", "\x85", "\u3000"]
+    rows += [("c", 9 + i, "user", lead + doc, None, ts)
+             for i, lead in enumerate(leads)]
     df = spark.createDataFrame(
         rows, "conv_id string, turn_idx int, role string, text string, "
               "tool string, ts timestamp")
     a = _collect(triples_only(extract_triples(df)))
     b = _collect(triples_only(extract_triples_hybrid(df)))
     assert a == b
+    assert {r[1] for r in a if r[3] == "http://example.org/d"} == {9, 10}
 
 
 def test_hybrid_matches_kernel_on_tool_payload_battery(spark):
@@ -102,9 +110,8 @@ def test_hybrid_matches_kernel_on_tool_payload_battery(spark):
         # unsorted (': ' > '0'), though reading '", "' as a key sorts it
         ('{"args": {" ": "a", ": ": "b", "0": "c"}, "name": "sep-unsorted"}',
          kernel),
-        # a key past the BIG decoder's 50,000-char name limit makes the
-        # kernel keep the payload as toolRaw
-        ('{"args": {"' + "k" * 50_001 + '": "v"}, "name": "longkey"}', kernel),
+        # no length limit: a 50,001-char key is a key to both paths
+        ('{"args": {"' + "k" * 50_001 + '": "v"}, "name": "longkey"}', jvm),
         ('{}', kernel),
         ('{"name": "argsless"}', kernel),
         ('{"args": {"q": "x"}}', kernel),
@@ -128,12 +135,10 @@ def test_hybrid_matches_kernel_on_tool_payload_battery(spark):
 
 
 def test_hybrid_matches_kernel_across_nesting_depth_band(spark):
-    """The two routing parsers have different depth ceilings (Jackson
-    rejects nesting > 1000; Python's scanner fails near the recursion
-    limit, ~994 measured). Parity must hold at EVERY depth: when only
-    Jackson parses, the row still routes to the kernel whose re-parse
-    fails to the envelope; when neither parses, both sides take the
-    envelope. Probed across the band — this pins it."""
+    """Python's scanner fails near the recursion limit (~994 levels
+    measured). Every depth routes to the kernel by shape; a text too
+    deep for its parser takes the envelope on both paths. Probed across
+    the band — this pins it."""
     def deep_doc(n):
         return '{"@id": "http://x#s", "a": ' + "[" * n + "1" + "]" * n + "}"
 
@@ -149,59 +154,64 @@ def test_hybrid_matches_kernel_across_nesting_depth_band(spark):
 
 
 def test_hybrid_matches_kernel_at_jackson_size_limits(spark):
-    """Jackson's StreamReadConstraints (numbers <= 1000 digits, member
-    names <= 50,000 chars — boundaries probed through get_json_object
-    on this Spark build) are mirrored by the kernel-side BIG decoder,
-    so texts on either side of each boundary take the same path on
-    both routes. Each boundary is tested one-below/one-above."""
+    """Texts on either side of the size limits of Jackson, the JVM
+    parser the route once probed with (numbers <= 1000 digits, member
+    names <= 50,000 chars), are plain JSON to JSON.parse and to the
+    kernel's parser. Every one routes to the kernel, both extractors
+    agree, and the texts past a limit parse as documents on both paths.
+    An integer of more than 4,300 digits still takes the envelope on
+    both paths (Python's int-string conversion limit, which JSON.parse
+    does not have); that gap is out of scope here."""
+    from jsonld_js_spark.operators.pipeline import _needs_kernel_col
+
     ctx = '{"@context": {"@vocab": "http://x#"}, "@id": "http://x#s", '
     texts = [
-        ctx + '"a": ' + "9" * 1000 + "}",     # parses both -> Infinity
-        ctx + '"a": ' + "9" * 1001 + "}",     # envelope both
-        ctx + '"a": 0.' + "9" * 1000 + "}",   # digits 1001 -> envelope
-        ctx + '"a": -' + "9" * 1000 + ".5e5}",  # 1005 digits -> envelope
-        ctx + '"' + "k" * 50_000 + '": 1}',   # parses both
-        ctx + '"' + "k" * 50_001 + '": 1}',   # envelope both
+        ctx + '"a": ' + "9" * 1000 + "}",
+        ctx + '"a": ' + "9" * 1001 + "}",
+        ctx + '"a": 0.' + "9" * 1000 + "}",
+        ctx + '"a": -' + "9" * 1000 + ".5e5}",
+        ctx + '"' + "k" * 50_000 + '": 1}',
+        ctx + '"' + "k" * 50_001 + '": 1}',
     ]
     rows = [("c", i, "user", t, None, None) for i, t in enumerate(texts)]
     df = spark.createDataFrame(
         rows, "conv_id string, turn_idx int, role string, text string, "
               "tool string, ts timestamp")
+    assert [r[0] for r in df.select(_needs_kernel_col()).collect()] == \
+        [True] * len(texts)
     a = sorted(map(tuple, extract_triples(df).collect()))
     b = sorted(map(tuple, extract_triples_hybrid(df).collect()))
     assert a == b
-    # and the limits must not fire below the boundary: the 1000-digit
-    # doc must actually have parsed as a DOC (Infinity double triple)
-    assert any(r[5] == "http://x#a" and r[7] == "Infinity" for r in a)
+    objects = {(r[1], r[5]): r[7] for r in a}
+    assert objects[(0, "http://x#a")] == "Infinity"
+    assert objects[(1, "http://x#a")] == "Infinity"
+    assert objects[(2, "http://x#a")] == "1"
+    assert objects[(5, "http://x#" + "k" * 50_001)] == "1"
 
 
-def test_big_decoder_mirrors_jackson_string_limit():
-    """Decoder-level: object-member string values past Jackson's
-    ~20M-char cap are refused by the BIG decoder (array elements are
-    not; the routing test below covers them)."""
-    import pytest
-
-    from jsonld_js_spark.operators.pipeline import (
-        _JK_MAX_STRING, _STRICT_JSON_BIG)
-
-    ok = '{"a": "' + "x" * 1000 + '"}'
-    assert _STRICT_JSON_BIG.decode(ok)["a"] == "x" * 1000
-    with pytest.raises(ValueError):
-        _STRICT_JSON_BIG.decode('{"a": "' + "x" * (_JK_MAX_STRING + 1) + '"}')
-
-
-def test_hybrid_routes_texts_past_jackson_string_limit_to_kernel(spark):
-    """The JVM probe refuses a >20M-char string anywhere, the kernel's
-    parser only in object members; every text that long goes to the
-    kernel, whose parse then decides."""
-    from jsonld_js_spark.operators.pipeline import (
-        _JK_MAX_STRING, _needs_kernel_col)
-
+def test_hybrid_matches_kernel_on_missing_turn_keys(spark):
+    """A turn whose conv_id or turn_idx is NULL gives one `missing turn
+    key` warning row, with every triple field NULL, and no triple on
+    both extractors, whichever route it would take."""
+    doc = '{"@context": {"@vocab": "http://x#"}, "@id": "http://x#s", "a": 1}'
+    unsorted_tool = '{"args": {"b": "x", "a": "y"}, "name": "t"}'
+    rows = [(None, 0, "user", "plain", None, None),
+            ("c", None, "user", "plain", None, None),
+            (None, 1, "user", doc, None, None),
+            ("c", None, "tool", "r", unsorted_tool, None),
+            ("c", 2, "user", doc, None, None)]
     df = spark.createDataFrame(
-        [("c", 0, "user", "x" * (_JK_MAX_STRING + 1), None, None)],
-        "conv_id string, turn_idx int, role string, text string, "
-        "tool string, ts timestamp")
-    assert df.filter(_needs_kernel_col()).count() == 1
+        rows, "conv_id string, turn_idx int, role string, text string, "
+              "tool string, ts timestamp")
+    a = sorted(map(tuple, extract_triples(df).collect()), key=repr)
+    b = sorted(map(tuple, extract_triples_hybrid(df).collect()), key=repr)
+    assert a == b
+    keyless = [r for r in a if r[0] is None or r[1] is None]
+    assert keyless == sorted(
+        ((c, t, "warning", None, None, None, None, "missing turn key",
+          "conv_id or turn_idx is NULL", None) for c, t, *_ in rows[:4]),
+        key=repr)
+    assert [r[2] for r in a if r[1] == 2] == ["triple"]
 
 
 def test_hybrid_matches_kernel_on_tool_payload_fuzz(spark):
@@ -359,8 +369,10 @@ def test_hybrid_plain_path_has_no_python_stage(spark, tmp_path):
     assert plan.count("/turn/") == 1, plan
     for node, n in (("FileScan", 1), ("Union", 0), ("MapInPandas", 0),
                     ("ArrowEvalPython", 1), ("Generate", 1),
-                    # the tool gate and the JSON probe: once, in the route
-                    ("RLIKE(tool", 1), ("get_json_object", 1)):
+                    # the tool gate: once, in the route; the kernel's
+                    # parser alone judges documents
+                    ("RLIKE(tool", 1), ("get_json_object", 0),
+                    ("length(", 0)):
         assert plan.count(node) == n, (node, plan)
     plan = _executed_plan(extract_triples(tx))
     for node, n in (("FileScan", 1), ("MapInPandas", 0),

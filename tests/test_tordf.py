@@ -144,8 +144,8 @@ def test_jcs_nan_rejected_and_nan_text_degrades_to_envelope():
     the reference's (RFC 8785), and texts carrying those tokens never
     parse as documents at the extraction boundary (JSON.parse
     strictness via parse_constant): they fall back to the envelope —
-    same as the reference's loader and the hybrid's Jackson probe —
-    instead of poisoning the rdf:JSON serializer mid-task. The
+    same as the reference's loader — instead of poisoning the rdf:JSON
+    serializer mid-task. The
     ValueError catch in turn_to_quads stays as defense-in-depth for
     programmatic (non-text) kernel inputs."""
     import pytest
