@@ -1,5 +1,11 @@
 """The flagship pipeline: transcripts -> triples, fused in ONE Arrow stage.
 
+Two extractors, one served path: ``extract_triples_hybrid`` is what
+every caller runs (the declared queries, ``plans.lineage``,
+``streaming.incremental``, ``bench.py``); ``extract_triples`` sends every
+turn through the kernel and is kept as the oracle the hybrid is tested
+against.
+
 Stage plan (SURVEY §3.1):
   stage 1 (narrow, no shuffle): read transcripts -> one scalar Arrow
     UDF, ``kernel_rows``, running parse -> context -> expand -> nodeMap
@@ -111,7 +117,8 @@ def envelope_doc(conv_id: str, turn_idx: int, role: str, text: str,
             doc["invokes"] = f"https://example.org/tool/{name}"
             if "args" in payload:
                 doc["toolArgs"] = {"@value": payload["args"], "@type": "@json"}
-        except (ValueError, AttributeError):
+        except (ValueError, AttributeError, RecursionError):
+            # too deep for the parser: as unparseable as invalid JSON
             doc["toolRaw"] = tool
     return doc
 
@@ -125,17 +132,14 @@ def turn_to_quads(conv_id: str, turn_idx: int, role: str, text: str,
     opts = {**(options or {}), "events": events}
     salt = _doc_salt(conv_id, turn_idx)
 
+    doc = None
     if looks_like_jsonld(text):
         try:
             doc = _parse_doc_text(text)
-        except ValueError:
-            doc = None
-        except RecursionError:
+        except (ValueError, RecursionError):
             # a structurally-too-deep text is as unparseable as invalid
             # JSON: fall back to the envelope doc, never the executor
-            doc = None
-    else:
-        doc = None
+            pass
     if doc is None:
         doc = envelope_doc(conv_id, turn_idx, role, text, tool, ts)
 
@@ -265,7 +269,9 @@ def extract_triples(transcripts: DataFrame, *, canonicalize: bool = False,
     long form, filterable without a second pass.
 
     Every turn crosses into the kernel through one scalar Arrow UDF,
-    whose per-turn arrays one Generate explodes.
+    whose per-turn arrays one Generate explodes. The oracle of
+    ``extract_triples_hybrid``, which every caller runs: tests and the
+    benchmark compare the two.
     """
     kernel_rows = _kernel_rows(canonicalize=canonicalize, options=options)
     return _extracted(transcripts, kernel_rows(*_TURN_COLS))
@@ -376,8 +382,10 @@ _ENVELOPE_ROWS = "array({})".format(", ".join((
 
 
 def extract_triples_hybrid(transcripts: DataFrame, *,
+                           canonicalize: bool = False,
                            options: dict | None = None) -> DataFrame:
-    """The scale path: same output as ``extract_triples``, but only
+    """The extractor every caller runs: same output as ``extract_triples``
+    (canonicalized too: envelope rows carry no blank node), but only
     JSON-LD documents and tool payloads outside the fast-path grammar
     (route ``k``, computed once per turn) run the kernel. Its UDF gets
     every input as ``when(k, col)``, so other turns cross as NULLs; their
@@ -386,7 +394,7 @@ def extract_triples_hybrid(transcripts: DataFrame, *,
     and one ``explode(IF(k, kernel rows, envelope rows))`` stays under
     whole-stage codegen. No repartition before the UDF: the extra
     exchange measured 0.89x (OPTIMIZATION_r06.md)."""
-    kernel_rows = _kernel_rows(canonicalize=False, options=options)
+    kernel_rows = _kernel_rows(canonicalize=canonicalize, options=options)
     k = F.col("k")
     # python isoformat(): fractional part only when non-zero micros
     ts_short = F.date_format("ts", "yyyy-MM-dd'T'HH:mm:ss")

@@ -51,7 +51,8 @@ def run_resumable(transcripts: DataFrame, out_dir: str, *,
                   n_groups: int = 16, canonicalize: bool = False,
                   max_groups: int | None = None,
                   files_per_group: int = 4) -> dict:
-    """Extract triples group-by-group with checkpoint/resume.
+    """Extract triples group-by-group with checkpoint/resume, through
+    ``extract_triples_hybrid``.
 
     ``max_groups`` processes at most that many pending groups (the
     test's stand-in for a mid-job kill). ``files_per_group`` sets the
@@ -63,7 +64,7 @@ def run_resumable(transcripts: DataFrame, out_dir: str, *,
     """
     from pyspark.sql import Observation
 
-    from ..operators.pipeline import extract_triples
+    from ..operators.pipeline import extract_triples_hybrid
 
     os.makedirs(os.path.join(out_dir, "manifest"), exist_ok=True)
     done = completed_groups(out_dir)
@@ -88,7 +89,8 @@ def run_resumable(transcripts: DataFrame, out_dir: str, *,
         # overflow int64 under ANSI mode even at 2^32 rows per group.
         obs_ext = Observation(f"lineage_ext_{g}")
         obs_tri = Observation(f"lineage_tri_{g}")
-        extracted = extract_triples(part, canonicalize=canonicalize).observe(
+        extracted = extract_triples_hybrid(
+            part, canonicalize=canonicalize).observe(
             obs_ext,
             F.sum(F.when(F.col("kind") == "warning", 1).otherwise(0))
             .alias("n_warnings"))

@@ -297,7 +297,7 @@ def _tordf_customers_raw(spark, sf_dir):
     candidates). Skips one full shuffle and one range-partition+sort
     of the triples stream; output of the CONSUMER query is
     hash-identical (driver-gated)."""
-    from .operators.pipeline import extract_triples, triples_only
+    from .operators.pipeline import extract_triples_hybrid, triples_only
 
     c = load(spark, sf_dir, "customer")
     n = load(spark, sf_dir, "nation")
@@ -317,7 +317,7 @@ def _tordf_customers_raw(spark, sf_dir):
         F.lit('", "name": "'), F.col("n_name"), F.lit('"}}'))
     docs = _as_turns(c2, F.lit("kg"), F.col("c_custkey"), doc_text,
                      F.lit("assistant"))
-    tri = triples_only(extract_triples(docs))
+    tri = triples_only(extract_triples_hybrid(docs))
     return tri.select("subj", "pred", F.col("obj_value").alias("obj"))
 
 
@@ -351,22 +351,22 @@ def kg_extract_transcripts(spark, sf_dir):
     (deterministic, seed-fixed). No SQL oracle — correctness is the
     hand-written-quads P/R gate in tests/test_pipeline.py (canonize-
     then-compare, the reference comparator's semantics)."""
-    from .operators.pipeline import extract_triples, triples_only
+    from .operators.pipeline import extract_triples_hybrid, triples_only
     from .sources.transcripts import synthesize_transcripts
 
     tx = synthesize_transcripts(spark, 100, seed=42)
-    return triples_only(extract_triples(tx))
+    return triples_only(extract_triples_hybrid(tx))
 
 
 def kg_canonize_transcripts(spark, sf_dir):
     """Same pipeline with per-document RDFC-1.0 canonical labels
     (salt-namespaced). Rows-only check; label correctness is
     tests/test_canon.py."""
-    from .operators.pipeline import extract_triples, triples_only
+    from .operators.pipeline import extract_triples_hybrid, triples_only
     from .sources.transcripts import synthesize_transcripts
 
     tx = synthesize_transcripts(spark, 40, seed=42)
-    return triples_only(extract_triples(tx, canonicalize=True))
+    return triples_only(extract_triples_hybrid(tx, canonicalize=True))
 
 
 
@@ -562,14 +562,17 @@ _ORACLE_VERIFY = """SELECT doc1, doc2, jaccard FROM (
 WHERE jaccard >= 0.5
 """
 
-ORACLE_DOC_MINHASH = f'''
-WITH d0 AS (
+# the LSH oracles' shared CTEs: the token set of each document (d0),
+# then the collapsed-shape table (d), its token hashes (tok), minhash
+# signatures (mins) and band buckets (buckets)
+_ORACLE_TOKEN_SETS = """d0 AS (
   SELECT doc_id,
          list_distinct(list_filter(string_split(text, ' '), x -> x <> ''))
              AS toks
   FROM documents
-  WHERE len(list_filter(string_split(text, ' '), x -> x <> '')) > 0),
-d AS (
+  WHERE len(list_filter(string_split(text, ' '), x -> x <> '')) > 0)"""
+
+_ORACLE_BUCKETS = f'''d AS (
   SELECT doc_id, toks FROM (
     SELECT doc_id, toks,
            MIN(doc_id) OVER (
@@ -595,7 +598,11 @@ buckets AS (
           b, " || '|' || ".join(
               "CAST(mh%d AS VARCHAR)" % (b * (_N_MINHASH // _N_BANDS) + r)
               for r in range(_N_MINHASH // _N_BANDS)))
-      for b in range(_N_BANDS))}),
+      for b in range(_N_BANDS))})'''
+
+ORACLE_DOC_MINHASH = f'''
+WITH {_ORACLE_TOKEN_SETS},
+{_ORACLE_BUCKETS},
 cand AS (
   SELECT DISTINCT a.doc_id AS doc1, b.doc_id AS doc2
   FROM buckets a JOIN buckets b
@@ -625,33 +632,7 @@ def doc_dedup_minhash_capped(spark, sf_dir):
 # the capped-LSH oracle chain from the collapsed-shape table on —
 # shared by the token-set and shingle variants (the d0 CTE is the only
 # difference between them)
-_ORACLE_CAPPED_CHAIN = f'''d AS (
-  SELECT doc_id, toks FROM (
-    SELECT doc_id, toks,
-           MIN(doc_id) OVER (
-             PARTITION BY md5(array_to_string(list_sort(toks), chr(31))))
-               AS rep
-    FROM d0)
-  WHERE doc_id = rep),
-tok AS (
-  SELECT doc_id,
-         CAST(CAST(concat('0x', substr(md5(t), 1, 15)) AS UBIGINT)
-              AS VARCHAR) AS t
-  FROM (SELECT doc_id, unnest(toks) AS t FROM d)),
-mins AS (
-  SELECT doc_id,
-         {", ".join(
-             "MIN(CAST(concat('0x', substr(md5('g%d|' || t), %d, 15))"
-             " AS UBIGINT)) AS mh%d" % (i // 2, 1 + 15 * (i % 2), i)
-             for i in range(_N_MINHASH))}
-  FROM tok GROUP BY doc_id),
-buckets AS (
-  {" UNION ALL ".join(
-      "SELECT doc_id, %d AS band, md5(%s) AS sig FROM mins" % (
-          b, " || '|' || ".join(
-              "CAST(mh%d AS VARCHAR)" % (b * (_N_MINHASH // _N_BANDS) + r)
-              for r in range(_N_MINHASH // _N_BANDS)))
-      for b in range(_N_BANDS))}),
+_ORACLE_CAPPED_CHAIN = f'''{_ORACLE_BUCKETS},
 sized AS (
   SELECT doc_id, band, sig,
          COUNT(*) OVER (PARTITION BY band, sig) AS bsize,
@@ -669,12 +650,7 @@ cand AS (
 {_ORACLE_VERIFY}'''
 
 ORACLE_DOC_MINHASH_CAPPED = f'''
-WITH d0 AS (
-  SELECT doc_id,
-         list_distinct(list_filter(string_split(text, ' '), x -> x <> ''))
-             AS toks
-  FROM documents
-  WHERE len(list_filter(string_split(text, ' '), x -> x <> '')) > 0),
+WITH {_ORACLE_TOKEN_SETS},
 {_ORACLE_CAPPED_CHAIN}'''
 
 
@@ -1521,11 +1497,12 @@ def kg_extract_documents(spark, sf_dir):
     sees the same input: every turn takes the envelope path, whose
     five triples the oracle reconstructs with string concat (the
     ORACLE_KG_TORDF pattern). This is the hash-level driver gate for
-    the extraction pipeline itself (kernel UDF -> expand -> toRDF)."""
-    from .operators.pipeline import extract_triples, triples_only
+    the hybrid's JVM envelope; the kernel's envelope is held to it by
+    the parity tests of the two extractors."""
+    from .operators.pipeline import extract_triples_hybrid, triples_only
 
     tx = _docs_as_transcripts(spark, sf_dir)
-    return (triples_only(extract_triples(tx))
+    return (triples_only(extract_triples_hybrid(tx))
             .select("conv_id", "turn_idx", "subj", "pred", "obj_kind",
                     "obj_value", "obj_datatype"))
 
@@ -1581,7 +1558,7 @@ def kg_canonize_documents(spark, sf_dir):
     vectors (symmetry-provable + hand-derived from the spec text) in
     tests/vectors/ + tests/test_canon_vectors.py, plus the
     invariance/first-degree re-derivation suites."""
-    from .operators.pipeline import extract_triples, triples_only
+    from .operators.pipeline import extract_triples_hybrid, triples_only
 
     # spread the single-split scan before the per-document canonize
     # kernel (test-data plumbing, see _spread)
@@ -1589,7 +1566,7 @@ def kg_canonize_documents(spark, sf_dir):
                    F.concat(F.lit("doc-"), F.col("doc_id")),
                    F.col("doc_id") % 5, _knows_doc(F.col("doc_id")),
                    F.lit("assistant"))
-    return (triples_only(extract_triples(tx, canonicalize=True))
+    return (triples_only(extract_triples_hybrid(tx, canonicalize=True))
             .select("conv_id", "turn_idx", "subj", "pred", "obj_kind",
                     "obj_value", "obj_datatype"))
 
@@ -1634,7 +1611,7 @@ def kg_canonize_poison(spark, sf_dir):
     same corpus canonizes normally. No executor stalls, no job
     failure: the poison degrades to (0 triples, 1 warning) and the
     row-count oracle pins both sides exactly."""
-    from .operators.pipeline import extract_triples
+    from .operators.pipeline import extract_triples_hybrid
 
     is_poison = F.col("doc_id") % 41 == 0
     text = (F.when(is_poison, F.lit(_K6_POISON_DOC))
@@ -1643,7 +1620,7 @@ def kg_canonize_poison(spark, sf_dir):
     tx = _as_turns(load_docs_wide(spark, sf_dir),
                    F.concat(F.lit("pz-"), F.col("doc_id")), F.lit(0), text,
                    F.lit("assistant"))
-    ex = extract_triples(tx, canonicalize=True)
+    ex = extract_triples_hybrid(tx, canonicalize=True)
     poison_warning = ((F.col("kind") == "warning")
                       & (F.col("obj_value")
                          == "canonicalization work factor exceeded"))
@@ -1674,7 +1651,7 @@ def kg_extract_poison_depth(spark, sf_dir):
     clean document extracts its 2 embedded-doc triples. No executor
     crash, no task retry storm: the failure mode that kills a 100-TB
     job after 4 retries. Row-count oracle pins both sides."""
-    from .operators.pipeline import extract_triples
+    from .operators.pipeline import extract_triples_hybrid
 
     deep_text = F.concat(
         F.lit('{"@context":{"n":"https://example.org/vocab#n"},'),
@@ -1688,7 +1665,7 @@ def kg_extract_poison_depth(spark, sf_dir):
     tx = _as_turns(load_docs_wide(spark, sf_dir),
                    F.concat(F.lit("dp-"), F.col("doc_id")), F.lit(0), text,
                    F.lit("assistant"))
-    ex = extract_triples(tx)
+    ex = extract_triples_hybrid(tx)
     return (ex.groupBy("conv_id")
             .agg(F.sum(F.when(F.col("kind") == "triple", 1).otherwise(0))
                  .alias("n_triples")))
@@ -1748,13 +1725,14 @@ def kg_full_build(spark, sf_dir):
     unioned into the graph. Rows-only driver check; each stage is
     independently oracle/parity-tested elsewhere."""
     from .operators.entity_link import link_entities, mention_triples
-    from .operators.pipeline import extract_triples, triples_only
+    from .operators.pipeline import extract_triples_hybrid, triples_only
     from .sources.entities import entities_df
     from .sources.transcripts import synthesize_transcripts
 
     tx = synthesize_transcripts(spark, 60, seed=42)
-    doc_triples = (triples_only(extract_triples(tx, canonicalize=True))
-                   .drop("conv_id", "turn_idx"))
+    doc_triples = (
+        triples_only(extract_triples_hybrid(tx, canonicalize=True))
+        .drop("conv_id", "turn_idx"))
     ents = entities_df(spark, 300)
     links = link_entities(tx, ents, strategy="salted", n_salt=8)
     mentions = mention_triples(links)

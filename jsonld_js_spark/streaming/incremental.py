@@ -10,7 +10,7 @@ adds two incremental paths (SURVEY §2.11 streaming):
    no always-on cluster.
 
 2. ``stream_extract``: true Structured Streaming — readStream over a
-   transcript directory -> the same fused Arrow extraction ->
+   transcript directory -> the same hybrid extraction ->
    writeStream. For deployments that want continuous construction.
    The extraction stage is stateless per-turn, so it composes with
    any sink/trigger; watermarked windowed aggregation over mention
@@ -35,7 +35,8 @@ def _ledger_path(state_dir: str) -> str:
 
 def incremental_batches(spark: SparkSession, input_dir: str, state_dir: str,
                         *, canonicalize: bool = False) -> tuple[DataFrame | None, list[str]]:
-    """Process transcript parquet files not yet in the ledger.
+    """Extract (``extract_triples_hybrid``) the transcript parquet files
+    not yet in the ledger.
 
     Returns (triples_df_for_new_files | None, newly_seen_files). The
     caller writes the triples and then calls ``commit_ingest`` —
@@ -52,9 +53,10 @@ def incremental_batches(spark: SparkSession, input_dir: str, state_dir: str,
     new = [f for f in files if f not in seen]
     if not new:
         return None, []
-    from ..operators.pipeline import extract_triples, triples_only
+    from ..operators.pipeline import extract_triples_hybrid, triples_only
     df = spark.read.parquet(*new)
-    return triples_only(extract_triples(df, canonicalize=canonicalize)), new
+    extracted = extract_triples_hybrid(df, canonicalize=canonicalize)
+    return triples_only(extracted), new
 
 
 def commit_ingest(state_dir: str, new_files: list[str]) -> None:
@@ -74,14 +76,16 @@ def stream_extract(spark: SparkSession, input_dir: str, *,
     """readStream over a transcript directory -> streaming triples DF.
 
     Caller attaches writeStream (parquet/console/memory sink). The
-    fused Arrow UDF stage is stateless, so it runs unchanged under
-    the micro-batch engine.
+    extractor is ``extract_triples_hybrid``: its route and its one
+    Arrow UDF are stateless per turn, so it runs unchanged under the
+    micro-batch engine.
     """
-    from ..operators.pipeline import extract_triples, triples_only
+    from ..operators.pipeline import extract_triples_hybrid, triples_only
 
     stream = (spark.readStream.schema(TRANSCRIPT_SCHEMA)
               .parquet(input_dir))
-    return triples_only(extract_triples(stream, canonicalize=canonicalize))
+    return triples_only(
+        extract_triples_hybrid(stream, canonicalize=canonicalize))
 
 
 def stream_windowed_mentions(transcripts_stream: DataFrame,

@@ -18,11 +18,52 @@ def _collect(df):
     return sorted(map(tuple, df.collect()))
 
 
-def test_hybrid_matches_kernel_on_corpus(spark):
+@pytest.mark.parametrize("canonicalize", [False, True])
+def test_hybrid_matches_kernel_on_corpus(spark, canonicalize):
     tx = synthesize_transcripts(spark, 20, seed=42).cache()
-    a = _collect(triples_only(extract_triples(tx)))
-    b = _collect(triples_only(extract_triples_hybrid(tx)))
+    a = _collect(triples_only(extract_triples(tx, canonicalize=canonicalize)))
+    b = _collect(triples_only(
+        extract_triples_hybrid(tx, canonicalize=canonicalize)))
     assert a == b
+
+
+def test_hybrid_matches_kernel_on_degradations_canonicalized(spark):
+    """Every degradation class under canonicalize=True: each text routes
+    to the kernel, and both extractors give equal rows, warning rows
+    included."""
+    from jsonld_js_spark.operators.pipeline import _needs_kernel_col
+    from jsonld_js_spark.queries import _K6_POISON_DOC
+
+    def nested(depth):
+        return ('{"@context": {"n": "http://x#n"}, ' + '"n": {' * depth
+                + '"@id": "http://x#leaf"' + "}" * depth + "}")
+
+    texts = [
+        _K6_POISON_DOC,
+        '{"@id": 5}',
+        nested(700),
+        '{"@context": {"j": {"@id": "http://x#j", "@type": "@json"}}, '
+        '"@id": "http://x#s", "j": 1e999}',
+        nested(50_000),
+        '{"@id": "http://x#s", "http://x#a": NaN}',
+        '{"@id": "http://x#s", "http://x#a": [1, 2',
+        '{"@id": "http://x#ok", "http://x#knows": {"http://x#n": "K"}}',
+    ]
+    rows = [("c", i, "user", t, None, None) for i, t in enumerate(texts)]
+    df = spark.createDataFrame(
+        rows, "conv_id string, turn_idx int, role string, text string, "
+              "tool string, ts timestamp")
+    assert all(r[0] for r in df.select(_needs_kernel_col()).collect())
+    a = sorted(map(tuple, extract_triples(df, canonicalize=True).collect()),
+               key=repr)
+    b = sorted(map(tuple,
+                   extract_triples_hybrid(df, canonicalize=True).collect()),
+               key=repr)
+    assert a == b
+    codes = {r[7] for r in a if r[2] == "warning"}
+    assert {"canonicalization work factor exceeded",
+            "invalid JSON literal"} <= codes, codes
+    assert any(r[4].startswith("_:c14n-") for r in a if r[1] == 7)
 
 
 def test_hybrid_matches_kernel_on_hostile_rows(spark):
@@ -120,6 +161,9 @@ def test_hybrid_matches_kernel_on_tool_payload_battery(spark):
         ('{"args": {"q": "x"}, "name": "bad name!"}', kernel),
         ('not json at all', kernel),
         ('{"args": {"q": "x"}, "name": "trailing"} ', kernel),
+        # nested deeper than the parser's stack: toolRaw, as invalid JSON
+        ('{"args": ' + "[" * 100_000 + "]" * 100_000 + ', "name": "x"}',
+         kernel),
     ]
     rows = [("c", i, "tool", f"tool result {i}", p, ts)
             for i, (p, _) in enumerate(payloads)]
@@ -287,7 +331,9 @@ def test_hybrid_matches_kernel_on_tool_payload_fuzz(spark):
     assert n_routed >= 20, f"grammar rejects nearly everything ({n_routed})"
 
 
-def test_hybrid_matches_kernel_on_separator_alphabet_fuzz(spark):
+@pytest.mark.parametrize("canonicalize", [False, True])
+def test_hybrid_matches_kernel_on_separator_alphabet_fuzz(spark,
+                                                          canonicalize):
     """Keys and values drawn from the separator characters themselves
     (',', ':', ' ') plus two ordinary ones, so strings like ', ' and
     ': ' are common and their delimiting quotes often read as '", "'
@@ -313,8 +359,9 @@ def test_hybrid_matches_kernel_on_separator_alphabet_fuzz(spark):
     df = spark.createDataFrame(
         rows, "conv_id string, turn_idx int, role string, text string, "
               "tool string, ts timestamp")
-    a = _collect(triples_only(extract_triples(df)))
-    b = _collect(triples_only(extract_triples_hybrid(df)))
+    a = _collect(triples_only(extract_triples(df, canonicalize=canonicalize)))
+    b = _collect(triples_only(
+        extract_triples_hybrid(df, canonicalize=canonicalize)))
     assert a == b
     routes = dict(df.select("turn_idx", _needs_kernel_col()).collect())
     for i, p in enumerate(payloads):

@@ -293,3 +293,11 @@ def test_deep_document_degrades_per_document():
             raise AssertionError((depth, len(quads), codes))
     # depth 20000 is beyond any parser stack: the envelope path ran
     assert "envelope" in outcomes
+
+    # a tool payload too deep for the parser is kept raw, as invalid
+    # JSON is: the envelope's six triples, toolRaw among them
+    tool = '{"args": ' + "[" * 100_000 + "]" * 100_000 + ', "name": "x"}'
+    quads, events = turn_to_quads("cd", 1, "tool", "r", tool, None)
+    assert events == [] and len(quads) == 6
+    assert any(q["predicate"]["value"].endswith("#toolRaw")
+               and q["object"]["value"] == tool for q in quads)

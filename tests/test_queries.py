@@ -106,11 +106,11 @@ def test_rows_only_queries_run(spark, name, fn):
 
 def test_kg_full_build_composite_gate(spark):
     """kg_full_build has no SQL oracle (its input is synthesized in
-    Python), but it decomposes exactly: output rows == canonized
-    document triples + entity-mention triples, and each half is
-    independently hash/parity-gated elsewhere (extract via the P/R
+    Python), but it decomposes exactly: its rows == the kernel oracle's
+    canonized document triples + entity-mention triples, and each half
+    is independently hash/parity-gated elsewhere (extract via the P/R
     quad oracle, linking via ORACLE_KG_ENTITY_LINK). This pins the
-    union itself."""
+    union itself, and the served extractor against the oracle."""
     from jsonld_js_spark.operators.entity_link import (
         link_entities, mention_triples)
     from jsonld_js_spark.operators.pipeline import (
@@ -119,14 +119,31 @@ def test_kg_full_build_composite_gate(spark):
     from jsonld_js_spark.sources.entities import entities_df
     from jsonld_js_spark.sources.transcripts import synthesize_transcripts
 
-    total = kg_full_build(spark, SF_DIR).count()
+    built = kg_full_build(spark, SF_DIR)
     tx = synthesize_transcripts(spark, 60, seed=42)
-    n_doc = triples_only(extract_triples(tx, canonicalize=True)).count()
+    doc = triples_only(extract_triples(tx, canonicalize=True)).drop(
+        "conv_id", "turn_idx")
     ents = entities_df(spark, 300)
-    n_mentions = mention_triples(
-        link_entities(tx, ents, strategy="salted", n_salt=8)).count()
-    assert n_doc > 0 and n_mentions > 0
-    assert total == n_doc + n_mentions
+    mentions = mention_triples(
+        link_entities(tx, ents, strategy="salted", n_salt=8))
+    assert doc.count() > 0 and mentions.count() > 0
+    expected = doc.unionByName(mentions)
+    assert built.exceptAll(expected).count() == 0
+    assert expected.exceptAll(built).count() == 0
+
+
+def test_kg_extract_documents_kernel_envelope_parity(spark):
+    """kg_extract_documents checks the hybrid's JVM envelope against
+    DuckDB; the kernel oracle must give the same rows over the same
+    turns, so the kernel's envelope is checked too, through this link."""
+    from jsonld_js_spark.operators.pipeline import (
+        extract_triples, extract_triples_hybrid)
+    from jsonld_js_spark.queries import _docs_as_transcripts
+
+    tx = _docs_as_transcripts(spark, SF_DIR)
+    a, b = extract_triples(tx), extract_triples_hybrid(tx)
+    assert a.count() > 0
+    assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
 
 
 def test_kg_canonize_transcripts_composite_gate(spark):
