@@ -20,6 +20,7 @@ operators batch them over Arrow record batches.
 from __future__ import annotations
 
 import json
+import numbers
 
 from . import canon as _canon
 from . import compact as _compact
@@ -45,6 +46,15 @@ def _prepare(options: dict | None) -> dict:
         if obsolete in options:
             raise JsonLdError(f'"{obsolete}" not supported.',
                               "jsonld.OptionsError")
+    # canon.py takes None, 0 and inf as they are and any other value as
+    # an exponent: anything else would fail in a worker, not here
+    mwf = options.get("maxWorkFactor")
+    if mwf is not None and (isinstance(mwf, bool)
+                            or not isinstance(mwf, numbers.Real)
+                            or not mwf >= 0):
+        raise JsonLdError(
+            f'"maxWorkFactor" must be a number >= 0, not {mwf!r}.',
+            "jsonld.OptionsError")
     options.setdefault("processingMode", "json-ld-1.1")
     options.setdefault("events", [])
     # jsonld.expand defaults base to '' when unset (lib/jsonld.js:307)

@@ -13,8 +13,11 @@ adds two incremental paths (SURVEY §2.11 streaming):
    transcript directory -> the same hybrid extraction ->
    writeStream. For deployments that want continuous construction.
    The extraction stage is stateless per-turn, so it composes with
-   any sink/trigger; watermarked windowed aggregation over mention
-   counts is provided as the stateful example.
+   any sink/trigger. The two stateful examples are both watermarked on
+   the turn's ``ts``, so their state is bounded by event time and an
+   ``availableNow`` trigger drains: windowed mention counts
+   (``stream_windowed_mentions``) and replay dedup
+   (``stream_dedup_turns``).
 """
 
 from __future__ import annotations
@@ -113,40 +116,24 @@ def stream_windowed_mentions(transcripts_stream: DataFrame,
 
 
 def stream_dedup_turns(transcripts_stream: DataFrame, *,
-                       state_ttl_minutes: int = 60) -> DataFrame:
-    """Exactly-once turn processing across micro-batches: a CUSTOM
-    STATEFUL operator via applyInPandasWithState. State per conv_id is
-    the set of turn_idx values already emitted; replayed/duplicated
-    turns (at-least-once sources re-deliver on recovery) are dropped
-    before the expensive extraction stage. State expires after
-    ``state_ttl_minutes`` of processing-time inactivity so the store
-    stays bounded by ACTIVE conversations, not corpus history.
+                       watermark: str = "60 minutes") -> DataFrame:
+    """Exactly-once turns across micro-batches: Spark's native
+    ``dropDuplicatesWithinWatermark`` on ``(conv_id, turn_idx)`` under
+    an event-time watermark on ``ts``. Replayed turns (at-least-once
+    sources re-deliver on recovery) are dropped before the expensive
+    extraction stage, with no Python stage.
+
+    State is bounded by event time: a key is kept until the watermark
+    (``watermark`` behind the max ``ts`` seen) passes its ``ts``. The
+    contract that follows:
+
+    - a new turn whose ``ts`` is behind the watermark is dropped and
+      counted in the batch's
+      ``progress["stateOperators"][0]["numRowsDroppedByWatermark"]``;
+    - a replay is dropped either way: as a duplicate while its key is
+      in state, as late once it has been evicted;
+    - a turn with a NULL ``ts`` is not deduplicated: it passes through
+      once per delivery (at-least-once).
     """
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    out_schema = TRANSCRIPT_SCHEMA
-    state_schema = "seen array<int>"
-
-    def dedup(key, pdfs, state: GroupState):
-        if state.hasTimedOut:
-            state.remove()
-            return
-        seen = set(state.get[0]) if state.exists else set()
-        for pdf in pdfs:
-            fresh = pdf[~pdf["turn_idx"].isin(seen)]
-            # first occurrence within the batch wins, too
-            fresh = fresh.drop_duplicates(subset=["turn_idx"], keep="first")
-            if len(fresh):
-                seen.update(int(t) for t in fresh["turn_idx"])
-                yield fresh
-        state.update((sorted(seen),))
-        state.setTimeoutDuration(state_ttl_minutes * 60 * 1000)
-
-    return (transcripts_stream
-            .groupBy("conv_id")
-            .applyInPandasWithState(
-                dedup, outputStructType=out_schema,
-                stateStructType=state_schema,
-                outputMode="append",
-                timeoutConf=GroupStateTimeout.ProcessingTimeTimeout))
+    return (transcripts_stream.withWatermark("ts", watermark)
+            .dropDuplicatesWithinWatermark(["conv_id", "turn_idx"]))

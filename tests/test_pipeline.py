@@ -169,9 +169,12 @@ def test_options_reach_the_executors(spark):
 
 
 def test_bad_kernel_option_fails_loudly(spark):
-    """An option the kernel rejects raises when the extraction is
-    built, on both extractors: in the workers it would turn every turn
-    into zero quads and a warning row."""
+    """An option the kernel rejects raises an OptionsError when the
+    extraction is built, on both extractors: in the workers it would
+    turn every turn into zero quads and a warning row, or (a
+    maxWorkFactor canon.py cannot use) kill the task with a TypeError."""
+    from functools import partial
+
     from jsonld_js_spark.kernel.errors import JsonLdError
     from jsonld_js_spark.operators.pipeline import extract_triples_hybrid
 
@@ -179,9 +182,14 @@ def test_bad_kernel_option_fails_loudly(spark):
         [("c", 0, "user", "plain", None, None)],
         "conv_id string, turn_idx int, role string, text string, "
         "tool string, ts timestamp")
-    for extract in (extract_triples, extract_triples_hybrid):
-        with pytest.raises(JsonLdError, match="expansionMap"):
-            extract(tx, options={"expansionMap": lambda info: None})
+    bad = [("expansionMap", lambda info: None)] + [
+        ("maxWorkFactor", v) for v in ("abc", True, -1, float("nan"), [3])]
+    for extract in (extract_triples, extract_triples_hybrid,
+                    partial(extract_triples_hybrid, canonicalize=True)):
+        for name, value in bad:
+            with pytest.raises(JsonLdError, match=name) as ei:
+                extract(tx, options={name: value})
+            assert ei.value.name == "jsonld.OptionsError"
 
 
 def test_nquad_lines_match_kernel_serializer(transcripts, extracted):
